@@ -56,10 +56,10 @@ final case class LocusRow(
   * gate (F5), and tombstoning of malformed/unknown-structure records
   * (F3/F4).
   *
-  * Input rows must be in file order within each file; Spark's
-  * FileScanRDD reads packed files sequentially inside a partition and
-  * gzip inputs are non-splittable, so `spark.read.text` +
-  * `input_file_name()` satisfies this by construction.
+  * Input rows must be in file order within each file, and each file's
+  * rows contiguous. The batch reader ([[graft.sources.EmblDataSource]])
+  * streams a partition's whole files one after another, and gzip inputs
+  * are never split, so this holds by construction.
   *
   * Memory is O(one record's loci), matching the reference's streaming
   * profile — nothing holds a whole file.
@@ -124,7 +124,10 @@ object EmblSegmenter {
 
   private def dead(path: String) = new RecordState("", -1, 0L, path, None)
 
-  /** Segment an ordered stream of `(file_path, line)` into loci. */
+  /** Segment an ordered stream of `(file_path, line)` into loci. A
+    * `null` line marks a file whose read failed partway: the record in
+    * flight is dropped rather than emitted truncated.
+    */
   def segment(
       rows: Iterator[(String, String)],
       metrics: Option[SegMetrics] = None): Iterator[LocusRow] = {
@@ -140,10 +143,12 @@ object EmblSegmenter {
         } else Seq.empty
       curPath = path
 
-      // F1 prefix prefilter (parse_embl.py:488-489)
-      if (!(line.startsWith("FT   ") || line.startsWith("ID   ") ||
-            line.startsWith("OC   "))) {
+      if (line == null) {
+        state = dead(path) // file cut short: drop the record in flight
         crossed
+      } else if (!(line.startsWith("FT   ") || line.startsWith("ID   ") ||
+            line.startsWith("OC   "))) {
+        crossed // F1 prefix prefilter (parse_embl.py:488-489)
       } else if (line.startsWith("ID   ")) {
         // flush + emit previous record, start the next (py:494-520)
         val out = crossed ++ state.finishRecord()

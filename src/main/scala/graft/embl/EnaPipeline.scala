@@ -3,10 +3,12 @@ package graft.embl
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.EmblDataSource
+
 /** The end-to-end ENA pipeline as ONE lazy Spark plan (SURVEY.md §3):
-  * pruned text scan -> per-partition EMBL segmentation -> broadcast
-  * idmapping join -> fallback coalesce -> explode -> 7-column relation
-  * -> TSV sink partitioned by source-tree division.
+  * pruned EMBL scan with in-reader segmentation -> broadcast idmapping
+  * join -> fallback coalesce -> explode -> 7-column relation -> TSV
+  * sink partitioned by source-tree division.
   *
   * Replaces the reference's dynamic Dask graph + per-record MySQL
   * round-trips (dask_tskmgr.py:110-257, mysql_database.py:50-134): file
@@ -14,14 +16,15 @@ import org.apache.spark.sql.functions._
   * `IN`-list query amortizes into a single hash join (J1/J2), and the
   * scratch-then-move staging is the built-in FileOutputCommitter (S11).
   *
-  * Scale notes (100 TB): gzip inputs are non-splittable so the scan is
-  * one task per file, same granularity as the reference's workers; tiny-
-  * file storms are handled by Spark input packing
-  * (`spark.sql.files.maxPartitionBytes`). The idmapping build side is
-  * broadcast by default (test/SF scale); at true UniProt scale
-  * (~1e9 rows) pass `broadcastIdMap = false` and the planner picks a
-  * shuffled hash / sort-merge join — the join condition is declarative
-  * either way.
+  * Scale notes (100 TB): gzip inputs are non-splittable, so a file is
+  * never split across tasks; whole files are bin-packed into tasks by
+  * bytes (`spark.sql.files.maxPartitionBytes` / `openCostInBytes`), so
+  * a tiny-file storm costs tasks in proportion to its volume, not its
+  * file count, while a large file gets a task of its own. The
+  * idmapping build side is broadcast by default (test/SF scale); at
+  * true UniProt scale (~1e9 rows) pass `broadcastIdMap = false` and the
+  * planner picks a shuffled hash / sort-merge join — the join condition
+  * is declarative either way.
   */
 object EnaPipeline {
 
@@ -61,32 +64,22 @@ object EnaPipeline {
     regexp_extract(path, "/(\\w+)\\.dat\\.gz$", 1)
 
   /** S1/S2/S3/S4/S5: recursive discovery + glob + divisional prune +
-    * gzip text scan + record segmentation, yielding the flattened
-    * `loci` relation.
+    * gzip scan + record segmentation, yielding the flattened `loci`
+    * relation. This is the `format("embl")` relation typed as
+    * [[LocusRow]]; the segmentation counters ride on its table instance.
     */
   def readLoci(
       spark: SparkSession,
       roots: Seq[String],
       applyDivisionPrune: Boolean = true,
       metrics: Option[SegMetrics] = None): Dataset[LocusRow] = {
-    val text = spark.read
-      .option("recursiveFileLookup", "true")
-      .option("pathGlobFilter", "*.dat.gz")
-      .text(roots: _*)
-      .select(input_file_name().as("file_path"), col("value"))
-    val pruned =
-      if (applyDivisionPrune)
-        // reference semantics (dask_tasks.py:82-85): only files whose
-        // DIRECTORY path contains "sequence" are division-pruned
-        text.filter(
-          !col("file_path").rlike("sequence.*/") ||
-            col("file_path").rlike(DivisionTokenRegex))
-      else text
-    segmentLines(spark, pruned, metrics)
+    import spark.implicits._
+    EmblDataSource.load(spark, roots, applyDivisionPrune, metrics).as[LocusRow]
   }
 
-  /** S5 proper: ordered `(file_path, value)` lines -> loci. Exposed
-    * separately so tests can feed hand-built line Datasets.
+  /** S5 over a line relation: ordered `(file_path, value)` lines ->
+    * loci, for callers that hold lines rather than files, such as a
+    * materialized text scan.
     */
   def segmentLines(
       spark: SparkSession,

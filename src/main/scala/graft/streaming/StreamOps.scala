@@ -228,7 +228,7 @@ object StreamOps {
 
     val text = roots.tail.foldLeft(read(roots.head))((acc, r) => acc.union(read(r)))
     val pruned =
-      if (applyDivisionPrune) // S3, same predicate as the batch readLoci
+      if (applyDivisionPrune) // S3, the predicate EmblScan applies at listing
         text.filter(
           !col("file_path").rlike("sequence.*/") ||
             col("file_path").rlike(DivisionTokenRegex))
