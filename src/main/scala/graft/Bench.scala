@@ -234,11 +234,10 @@ object Bench {
       s""""cpus":$cpus,"master":"local[$cpus]","shuffle_partitions":$shuffleParts,"layout_partitions":$layoutParts,"input_bytes":$totalBytes"""
     val line =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"runs":$runsJson,"errors":$errJson,"n_failed":${errors.size},$confEcho,"sf":"$sfDir"}"""
-    // STDOUT gets a COMPACT but COMPLETE line (r16 VERDICT #1: the
-    // driver's log tail held only the last ~8 KB of the full line, so
-    // BENCH_r16.json preserved 31 of 154 query vectors — a misleading
-    // record). Same schema minus the per-run "runs" vectors, values
-    // rounded to 0.1 ms: ~5 KB for 154 queries, which survives any
+    // STDOUT gets a COMPACT but COMPLETE line: a log tail that keeps
+    // only the last ~8 KB of the full line once preserved 31 of 154
+    // query vectors — a misleading record. Same schema minus the
+    // per-run "runs" vectors, values rounded to 0.1 ms: ~5 KB for 154 queries, which survives any
     // reasonable tail window. The full-precision line with all run
     // vectors is the FILE artifact below — the bench of record.
     // Locale.ROOT pins the decimal separator: under a comma-decimal

@@ -38,7 +38,9 @@ import graft.embl.{EnaPipeline, SegMetrics}
   * Reads gzipped EMBL flat files under the given roots (recursive,
   * `*.dat.gz`, sequence-tree division prune applied), resolves protein
   * ids against the idmapping relation, writes the 7-column headerless
-  * TSV, and logs the segmentation counters (A5).
+  * TSV, and logs the segmentation counters (A5). The id-resolution
+  * regime is not a setting: [[chooseBroadcastRegime]] picks broadcast
+  * for mappings within 1 M rows and 256 MB, shuffle otherwise.
   */
 object EnaMain {
 
@@ -91,20 +93,19 @@ object EnaMain {
       spark.read.parquet(source).select(col("foreign_id"), col("uniprot_id"))
     }
 
-  /** Bounded broadcast-regime probe (VERDICT r3 wrong-#1): decide
-    * broadcast vs shuffle by reading AT MOST `maxRows`+1 rows. The
-    * former `idmapping.count()` made a V1 JDBC relation scan the whole
-    * side table — at true UniProt scale (~1e9 rows) a full read just to
-    * pick the join strategy. `limit(n).count()` plans a per-partition
-    * LocalLimit, so each cursor stops after n rows (with fetchsize
-    * batching, only ~n rows ever cross the wire).
+  /** Bounded broadcast-regime probe: decide broadcast vs shuffle by
+    * reading AT MOST `maxRows`+1 rows. The former `idmapping.count()`
+    * made a V1 JDBC relation scan the whole side table — at true
+    * UniProt scale (~1e9 rows) a full read just to pick the join
+    * strategy. `limit(n).count()` plans a per-partition LocalLimit, so
+    * each cursor stops after n rows (with fetchsize batching, only ~n
+    * rows ever cross the wire).
     *
-    * BYTE cap as well as row cap (VERDICT r6 wrong-#3): a row cap alone
-    * lets 10⁶ rows of pathologically wide ids bloat the driver-built
-    * map, so the same bounded probe also sums payload bytes
-    * (`octet_length` of both id strings) and charges a per-entry JVM
-    * overhead (string headers, map-entry boxing). Either cap exceeded →
-    * shuffle regime.
+    * BYTE cap as well as row cap: a row cap alone lets 10⁶ rows of
+    * pathologically wide ids bloat the driver-built map, so the same
+    * bounded probe also sums payload bytes (`octet_length` of both id
+    * strings) and charges a per-entry JVM overhead (string headers,
+    * map-entry boxing). Either cap exceeded → shuffle regime.
     */
   def chooseBroadcastRegime(
       idmapping: DataFrame,
@@ -191,18 +192,9 @@ object EnaMain {
     val metrics = Some(SegMetrics(spark.sparkContext))
     // regime selection: a driver-collected broadcast map only pays off
     // while it is small (the collect + map build is driver-serial);
-    // past the threshold the declarative shuffle join wins. Override
-    // with ENA_BROADCAST=0/1.
-    val maxBroadcastRows =
-      sys.env.getOrElse("ENA_BROADCAST_MAX_ROWS", "1000000").toLong
-    val maxBroadcastBytes =
-      sys.env.getOrElse("ENA_BROADCAST_MAX_BYTES", (256L << 20).toString).toLong
-    val broadcastIdMap = sys.env.get("ENA_BROADCAST") match {
-      case Some("0") => false
-      case Some("1") => true
-      case _ =>
-        chooseBroadcastRegime(idmapping, maxBroadcastRows, maxBroadcastBytes)
-    }
+    // past the caps the declarative shuffle join wins
+    val broadcastIdMap =
+      chooseBroadcastRegime(idmapping, maxRows = 1000000L, maxBytes = 256L << 20)
     val t0 = System.nanoTime()
     val enaTab = EnaPipeline.enaTab(spark, roots, idmapping,
       broadcastIdMap = broadcastIdMap, metrics = metrics)

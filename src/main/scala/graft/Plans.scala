@@ -114,7 +114,7 @@ object Plans {
     "q123_freq_items" ->
       "Space-Saving heavy hitters: ONE ObjectHashAggregate whose partial state is <= capacity counters per partition (partial_graft_freq_items), merged counter-wise at a single exchange — the full distinct-token space never shuffles; top-20 is a slice of the already-ranked summary, no sort, no window",
     "q124_mjpg_frames" ->
-      "MJPG frame decode (r12): per-partition streaming mapPartitions over a LocalRelation of media rows — each AVI's movi chunks decode through the JDK JPEG codec one frame at a time, no shuffle before the harness sort; tolerance flags are per-row codegen projections. At corpus scale the input is a binary-column parquet scan and the decode stays embarrassingly parallel (the Sf1xR12 curve)",
+      "MJPG frame decode (r12): per-partition streaming mapPartitions over a LocalRelation of media rows — each AVI's movi chunks decode through the JDK JPEG codec one frame at a time, no shuffle before the harness sort; tolerance flags are per-row codegen projections. At corpus scale the input is a binary-column parquet scan and the decode stays embarrassingly parallel",
     "q125_freq_items_eviction" ->
       "Space-Saving under EVICTION (r13): one range-generated stream feeds the bounded ObjectHashAggregate sketch (amortized-O(1) eviction, capacity 8192 counters per partial regardless of the 400k distinct keys) and a keyed exact-twin count agg; the 20-row sketch side broadcasts into the twin join. The sketch path's state is the POINT: no distinct-key shuffle anywhere near the 100 TB form",
     "q126_bigram_pmi" ->

@@ -956,7 +956,6 @@ object TextDedup {
       smallGraphMaxEdges: Int = defaultSmallGraphMaxEdges): DataFrame = {
     require(maxIter > 0, "maxIter must be positive")
     require(escalateAfter > 0, "escalateAfter must be positive")
-    lastPropRounds = 0
     lastStarRounds = 0
     val smallMax =
       if (graft.Regimes.forceDistributed) 0 else smallGraphMaxEdges
@@ -1048,7 +1047,6 @@ object TextDedup {
       labels = next
       iter += 1
     }
-    lastPropRounds = iter
     if (converged) {
       // edges fed every round but the RETURNED plan reads only the final
       // labels checkpoint — release the edge blocks too
@@ -1081,14 +1079,11 @@ object TextDedup {
   def defaultSmallGraphMaxEdges: Int =
     if (graft.Regimes.forceDistributed) 0 else 1 << 17
 
-  /** Diagnostics: rounds the LAST [[duplicateComponents]] /
-    * [[starComponents]] call spent — propagation rounds, and star
-    * rounds when escalated (the driver union-find regime records
-    * 0/0). Measurement surface for the q80 growth curve
-    * (tools/Q80Curve) and the log-round contraction spec; not part of
-    * the operator contract.
+  /** Diagnostics: star rounds the LAST [[duplicateComponents]] /
+    * [[starComponents]] call spent (0 when it did not escalate, and in
+    * the driver union-find regime). Measurement surface for the
+    * log-round contraction spec; not part of the operator contract.
     */
-  @volatile private[graft] var lastPropRounds: Int = 0
   @volatile private[graft] var lastStarRounds: Int = 0
 
   /** Large-star/small-star connected components (the Kiveris et al.
@@ -1149,12 +1144,11 @@ object TextDedup {
         throw new IllegalStateException(
           s"starComponents did not converge in $maxIter rounds — " +
             "raise maxIter for this graph")
-      // checkpoint BETWEEN the two star steps (r12, found by the 550k-
-      // edge CcScale run): smallStar consumes its input through two
-      // union legs plus the min agg, so an unmaterialized largeStar
-      // pipeline re-executes several times per round — the barrier
-      // makes each round cost one pass of each step (54 s → 11 s on
-      // the 550k-edge planted graph)
+      // checkpoint BETWEEN the two star steps: smallStar consumes its
+      // input through two union legs plus the min agg, so an
+      // unmaterialized largeStar pipeline re-executes several times
+      // per round — the barrier makes each round cost one pass of each
+      // step (54 s → 11 s on a 550k-edge planted graph)
       val ls = largeStar(cur).localCheckpoint()
       val next = smallStar(ls).localCheckpoint()
       graft.operators.Checkpoints.release(ls)

@@ -1,8 +1,7 @@
-// Scratch generator (r14, VERDICT r13 next-round #2): an sf1 testdata
-// dir — every driver table at 10x sf0.1 — so the WHOLE 129-query
-// oracle suite + paired bench can run one scale factor above the bench
-// point. Replication follows the established per-replica-offset
-// conventions (Sf1xR12 / Q49Scale):
+// Generates an sf1 testdata dir — every sf0.1 table at 10x —
+// so the WHOLE 129-query oracle suite + paired bench can run one scale
+// factor above the bench point. Replication uses per-replica offsets,
+// so each replica is an independent copy of the sf0.1 workload:
 //  - dims region/nation copy verbatim (TPC-H holds them fixed);
 //  - fact/dim keys get rep * 100,000,000 offsets with REFERENTIAL
 //    INTEGRITY preserved (lineitem's part/supp/order keys shift with

@@ -4,21 +4,18 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Scale certifications promoted from manual tools to a GATED suite
-  * (r13, VERDICT r12 #3): the checks that certify behavior ABOVE the
-  * dual-regime probe bounds used to live in `graft.tools.CcScale` /
-  * `Sf1xR12` and ran only when a human remembered to invoke them — a
-  * regression there drifted silently. This suite makes them cost a
-  * red gate instead: `scripts/gate.sh` runs it once per round with
+/** Scale certifications as a GATED suite: the checks that certify
+  * behavior ABOVE the dual-regime probe bounds. Run only by hand, a
+  * regression there would drift silently; here it costs a red gate
+  * instead: `scripts/gate.sh` runs it once per round with
   * `SPARK_GRAFT_SLOW=1`; the default `sbt test` pass skips it via
   * `assume` (shown as canceled, costs nothing), because each test is
   * tens of seconds.
   *
-  * Kept deliberately BOUNDED (minutes, not the full Sf1xR12 media
-  * sweep): the asserts target the failure shapes that matter —
-  * distributed-CC value drift, heavy-hitter bound violations under
-  * eviction, and super-linear flagship growth — not benchmark curves,
-  * which remain the tools' job.
+  * Kept deliberately BOUNDED (minutes, not a full media sweep): the
+  * asserts target the failure shapes that matter — distributed-CC
+  * value drift, heavy-hitter bound violations under eviction, and
+  * super-linear flagship growth — not benchmark curves.
   */
 class ScaleCertSpec extends AnyFunSuite with SparkSpec {
 
@@ -28,9 +25,9 @@ class ScaleCertSpec extends AnyFunSuite with SparkSpec {
       "(above the small-graph probe bound)") {
     assume(slowEnabled, "set SPARK_GRAFT_SLOW=1 (gate.sh does)")
     import spark.implicits._
-    // planted graph (the CcScale fixture): 50k star clusters of 8
-    // members + 1k chains of diameter 200 — the chains overrun the
-    // propagation budget and force the star escalation
+    // planted graph: 50k star clusters of 8 members + 1k chains of
+    // diameter 200 — the chains overrun the propagation budget and
+    // force the star escalation
     val clusterEdges = (0 until 50000).flatMap { c =>
       val base = c.toLong * 10
       (1 to 7).map(i => (base, base + i))
@@ -67,7 +64,7 @@ class ScaleCertSpec extends AnyFunSuite with SparkSpec {
   test("Space-Saving eviction regime: bounds hold and precision@20 is " +
       "perfect on a 2M-row Zipf stream (capacity << distinct)") {
     assume(slowEnabled, "set SPARK_GRAFT_SLOW=1 (gate.sh does)")
-    // deterministic Zipf-ish stream (the Sf1xR12 shape, 2M rows):
+    // deterministic Zipf-ish stream (2M rows):
     // crc32-uniformized rank, ~50k distinct keys, capacity 256
     def zipfStream(rows: Long): DataFrame = {
       val u = greatest(
@@ -99,7 +96,7 @@ class ScaleCertSpec extends AnyFunSuite with SparkSpec {
   test("curation flagship grows sublinearly at 10x corpus " +
       "(dup-rate-preserving replicas)") {
     assume(slowEnabled, "set SPARK_GRAFT_SLOW=1 (gate.sh does)")
-    // the Sf1xR12 dup-rate-preserving construction at gate-sized scale:
+    // the dup-rate-preserving construction at gate-sized scale:
     // each replica suffixes every token with its replica id, so
     // within-replica dup structure is exactly the original's and
     // nothing collides across replicas. Base = sf0.01 documents

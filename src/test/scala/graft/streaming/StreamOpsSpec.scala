@@ -287,10 +287,11 @@ class StreamOpsSpec extends AnyFunSuite with SparkSpec {
         val t = truth(k).toLong
         assert(est >= t && est - err <= t, s"$k: est=$est err=$err true=$t")
       }
-      // bounded-state tripwire (the HhStateScale claim, permanently
-      // gated): state is ONE sketch row per open window — never a row
-      // per token or per event. 22 distinct tokens and 3 micro-batches
-      // ran through 2 open windows (hour 0 and the hour-3 advancer).
+      // bounded-state tripwire (state grows with open windows, not with
+      // stream length): state is ONE sketch row per open window — never
+      // a row per token or per event. 22 distinct tokens and 3
+      // micro-batches ran through 2 open windows (hour 0 and the hour-3
+      // advancer).
       val st = q.lastProgress.stateOperators.head
       assert(st.numRowsTotal <= 2,
         s"per-window sketch state leaked: ${st.numRowsTotal} rows")
