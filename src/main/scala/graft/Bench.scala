@@ -36,8 +36,7 @@ object Bench {
         (totalBytes / targetBytes).toInt)) // floor: fractional partitions cost a task
     val shuffleParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTS",
       derivedParts(4 << 20, 2).toString)
-    val layoutParts = sys.env.getOrElse("SPARK_GRAFT_LAYOUT_PARTS",
-      derivedParts(2 << 20, 4).toString).toInt
+    val layoutParts = derivedParts(2 << 20, 4)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", shuffleParts)
@@ -45,18 +44,16 @@ object Bench {
       // than size-first (68.5 s vs 78.8 s): size-first collapses the
       // histogram/value-domain aggregation stages to one task, which
       // costs the heavy queries more than the light queries save
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_COALESCE_PF", "true"))
-      // AQE off by default in the HARNESS (r8): at sf0.1 adaptive
-      // re-planning costs a per-stage driver round trip and extra jobs
-      // on every one of 116 queries — measured 115.3 s (on) vs 85.6 s
+      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "true")
+      // AQE off in the HARNESS (r8): at sf0.1 adaptive re-planning
+      // costs a per-stage driver round trip and extra jobs on every
+      // one of 116 queries — measured 115.3 s (on) vs 85.6 s
       // (off) same box, same code; the iterative CC queries (per-round
       // actions) gain the most. This is a bench-box knob, NOT the
       // library stance: at production scale AQE's skew splitting and
       // partition coalescing matter and the operators' plans do not
       // depend on either setting.
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "false"))
+      .config("spark.sql.adaptive.enabled", "false")
       // the default 100-entry generated-class cache cycles completely
       // over a 114-query suite (~4 codegen units each), so the
       // best-of-2 second run re-Janino-compiles every stage; size it to
@@ -72,12 +69,6 @@ object Bench {
       // bytesPerCore dominates anyway and splits grow back toward the
       // untouched 128 MiB maxPartitionBytes cap.
       .config("spark.sql.files.openCostInBytes", "65536")
-      // per-table fan-out exchange: superseded by the layout
-      // normalization below (an exchange per query taxed the 99 light
-      // queries more than it bought the heavy ones: 112 s vs 86 s
-      // measured); kept as an opt-in for raw-layout experiments
-      .config("spark.graft.harness.fanOutSmallScans",
-        sys.env.getOrElse("SPARK_GRAFT_FANOUT", "false"))
       // the normalization rewrite reads events.parquet (TIMESTAMP_NANOS)
       // directly; same legacy conf QueryPack.events() sets
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -58,8 +58,8 @@ final case class LocusRow(
   *
   * Input rows must be in file order within each file, and each file's
   * rows contiguous. The batch reader ([[graft.sources.EmblDataSource]])
-  * streams a partition's whole files one after another, and gzip inputs
-  * are never split, so this holds by construction.
+  * gives each whole file its own `segment` call, and gzip inputs are
+  * never split, so this holds by construction.
   *
   * Memory is O(one record's loci), matching the reference's streaming
   * profile — nothing holds a whole file.
@@ -124,10 +124,7 @@ object EmblSegmenter {
 
   private def dead(path: String) = new RecordState("", -1, 0L, path, None)
 
-  /** Segment an ordered stream of `(file_path, line)` into loci. A
-    * `null` line marks a file whose read failed partway: the record in
-    * flight is dropped rather than emitted truncated.
-    */
+  /** Segment an ordered stream of `(file_path, line)` into loci. */
   def segment(
       rows: Iterator[(String, String)],
       metrics: Option[SegMetrics] = None): Iterator[LocusRow] = {
@@ -143,10 +140,7 @@ object EmblSegmenter {
         } else Seq.empty
       curPath = path
 
-      if (line == null) {
-        state = dead(path) // file cut short: drop the record in flight
-        crossed
-      } else if (!(line.startsWith("FT   ") || line.startsWith("ID   ") ||
+      if (!(line.startsWith("FT   ") || line.startsWith("ID   ") ||
             line.startsWith("OC   "))) {
         crossed // F1 prefix prefilter (parse_embl.py:488-489)
       } else if (line.startsWith("ID   ")) {

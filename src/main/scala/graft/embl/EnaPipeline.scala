@@ -17,12 +17,12 @@ import graft.sources.EmblDataSource
   * scratch-then-move staging is the built-in FileOutputCommitter (S11).
   *
   * Scale notes (100 TB): gzip inputs are non-splittable, so a file is
-  * never split across tasks; whole files are bin-packed into tasks by
-  * bytes (`spark.sql.files.maxPartitionBytes` / `openCostInBytes`), so
-  * a tiny-file storm costs tasks in proportion to its volume, not its
-  * file count, while a large file gets a task of its own. Id
-  * resolution has two regimes: a broadcast id-map for small mappings
-  * and a shuffle join for UniProt-scale ones (~1e9 rows).
+  * never split across tasks; Spark's own file-scan classes bin-pack
+  * whole files into tasks by bytes (`spark.sql.files.maxPartitionBytes`
+  * / `openCostInBytes`), so a tiny-file storm costs tasks in proportion
+  * to its volume, not its file count, while a large file gets a task of
+  * its own. Id resolution has two regimes: a broadcast id-map for small
+  * mappings and a shuffle join for UniProt-scale ones (~1e9 rows).
   * `EnaMain.chooseBroadcastRegime` picks one from a bounded probe of
   * the idmapping; the join condition is declarative either way.
   */
@@ -32,6 +32,16 @@ object EnaPipeline {
     * keeps bacteria/fungi/phage/env divisions only.
     */
   val DivisionTokenRegex = "_(ENV|PRO|FUN|PHG)_"
+
+  /** S3 as a `file_path` predicate: a file whose DIRECTORY path contains
+    * "sequence" is kept only if its path matches [[DivisionTokenRegex]]
+    * (dask_tasks.py:82-85); every other file is kept. Written as SQL so
+    * that a file index can evaluate it per listed file without an
+    * analyzer; the batch scan applies it at listing, the streaming
+    * ingest as a row filter.
+    */
+  val DivisionPrune: Column =
+    expr(s"NOT file_path RLIKE 'sequence.*/' OR file_path RLIKE '$DivisionTokenRegex'")
 
   /** X11 (dask_tasks.py:138-154): derive the output-layout division from
     * the source path: `.../wgs/public/wds/x.dat.gz` -> `wgs-public-wds`,
@@ -78,8 +88,9 @@ object EnaPipeline {
   }
 
   /** S5 over a line relation: ordered `(file_path, value)` lines ->
-    * loci, for callers that hold lines rather than files, such as a
-    * materialized text scan.
+    * loci, for callers that hold lines rather than files, such as the
+    * streaming ingest or a materialized text scan. Each file's lines
+    * must be contiguous and in order within one partition.
     */
   def segmentLines(
       spark: SparkSession,

@@ -1,25 +1,27 @@
 package graft.sources
 
-import java.io.{BufferedReader, FileNotFoundException, IOException, InputStreamReader}
+import java.io.FileNotFoundException
 import java.util
-import java.util.OptionalLong
 import java.util.zip.GZIPInputStream
 
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.{FileStatus, Path => HPath}
+import org.apache.hadoop.io.Text
+import org.apache.hadoop.util.LineReader
+import org.apache.spark.SparkException
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, PlanDataset, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.{FileSourceOptions, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{And, Attribute, BoundReference, Expression, GenericInternalRow, Predicate}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.execution.PartitionedFileUtil
-import org.apache.spark.sql.execution.datasources.{FilePartition, FileStatusWithMetadata, InMemoryFileIndex, PartitionDirectory}
-import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
-import org.apache.spark.sql.sources.{DataSourceRegister, EqualTo, Filter, StringContains, StringEndsWith, StringStartsWith}
+import org.apache.spark.sql.connector.read.{PartitionReader, PartitionReaderFactory, ScanBuilder}
+import org.apache.spark.sql.execution.datasources.{InMemoryFileIndex, PartitionDirectory, PartitionSpec, PartitionedFile, PartitioningAwareFileIndex}
+import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2Relation, FilePartitionReaderFactory, FileScan, FileScanBuilder, PartitionReaderFromIterator}
+import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -33,15 +35,16 @@ import graft.embl.{EmblSegmenter, EnaPipeline, LocusRow, SegMetrics}
   * batch EMBL reader: [[graft.embl.EnaPipeline.readLoci]] is this
   * relation typed as [[LocusRow]].
   *
-  * Physical layout: files are listed the way Spark's file sources list
-  * them and packed into input partitions by bytes with Spark's own rule
-  * (`spark.sql.files.maxPartitionBytes`, `openCostInBytes`,
-  * `minPartitionNum`). A file is never split — gzip is non-splittable
-  * and the segmentation state machine needs each file whole — so a
-  * partition is a run of whole files that stream, one after another,
-  * through a single segmenter. Column pruning pushes into the reader:
-  * unneeded fields are never materialized into rows
-  * (`SupportsPushDownRequiredColumns`).
+  * The scan runs on Spark's own V2 file-source classes, in the shape of
+  * its text source (`FileScanBuilder`, `FileScan`,
+  * `FilePartitionReaderFactory`): Spark prunes columns, packs whole
+  * files into tasks by bytes (`spark.sql.files.maxPartitionBytes`,
+  * `openCostInBytes`, `minPartitionNum`), estimates the scan's size and
+  * applies `ignoreCorruptFiles` / `ignoreMissingFiles` per file. The
+  * connector owns the schema, the listing policy ([[EmblFileIndex]])
+  * and the per-file reader, which streams one gzip file through
+  * [[EmblSegmenter.segment]]. A file is never split: gzip is
+  * non-splittable and a record needs its file whole.
   *
   * Options: `divisionPrune` (default true) applies the S3 filename
   * prune to `sequence/` trees at file-listing time — partition pruning
@@ -104,49 +107,31 @@ private[sources] class EmblTable(
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ)
 
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new EmblScanBuilder(options, properties, metrics)
-}
-
-private[sources] class EmblScanBuilder(
-    options: CaseInsensitiveStringMap, tableProps: Map[String, String],
-    metrics: Option[SegMetrics])
-    extends ScanBuilder with SupportsPushDownRequiredColumns
-    with SupportsPushDownFilters {
-  private var required: StructType = EmblDataSource.Schema
-  private var pathFilters: Array[Filter] = Array.empty
-
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-
-  /** `file_path` predicates prune at FILE level (every row of a file
-    * shares its file_path — a whole-file skip, the scan-time analog of
-    * partition pruning). All filters are also returned for post-scan
-    * re-evaluation, which keeps the contract trivially correct.
+  /** Built by the optimizer, where the active session is the querying
+    * one; the scan keeps it, since listing, packing and the reader
+    * factory must all obey that session's conf even when another
+    * session is active at execution time.
     */
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    pathFilters = filters.filter {
-      case EqualTo("file_path", _) | StringContains("file_path", _) |
-           StringStartsWith("file_path", _) | StringEndsWith("file_path", _) => true
-      case _ => false
-    }
-    filters
-  }
-  override def pushedFilters(): Array[Filter] = pathFilters
-
-  // DataFrame reads deliver path via scan options; CREATE TABLE ...
-  // USING embl delivers it via the table properties (OPTIONS/LOCATION)
-  private def opt(key: String): Option[String] =
-    Option(options.get(key)).orElse(tableProps.get(key))
-
-  override def build(): Scan = {
-    val paths = opt("paths").map(EmblScanBuilder.parsePaths)
+  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
+    // DataFrame reads deliver path via scan options; CREATE TABLE ...
+    // USING embl delivers it via the table properties (OPTIONS/LOCATION)
+    def opt(key: String): Option[String] =
+      Option(options.get(key)).orElse(properties.get(key))
+    val roots = opt("paths").map(EmblScanBuilder.parsePaths)
       .orElse(opt("path").map(Seq(_)))
       .orElse(opt("location").map(Seq(_)))
       .getOrElse(Seq.empty)
-    val prune = opt("divisionPrune").forall(_.toBoolean)
-    new EmblScan(paths, prune, required, pathFilters, metrics)
+    val spark = SparkSession.active
+    new EmblScanBuilder(spark,
+      new EmblFileIndex(spark, roots, opt("divisionPrune").forall(_.toBoolean)), metrics)
   }
+}
+
+private[sources] class EmblScanBuilder(
+    spark: SparkSession, index: EmblFileIndex, metrics: Option[SegMetrics])
+    extends FileScanBuilder(spark, index, EmblDataSource.Schema) {
+  override def build(): EmblScan =
+    EmblScan(spark, index, readDataSchema(), partitionFilters, dataFilters, metrics)
 }
 
 private[sources] object EmblScanBuilder {
@@ -154,8 +139,7 @@ private[sources] object EmblScanBuilder {
     * as a JSON-encoded array string in the `paths` option (the same
     * convention Spark's own FileDataSourceV2 decodes); a raw
     * comma-separated list is accepted for hand-written
-    * `OPTIONS (paths '...')` DDL. The former split(",") mangled JSON
-    * arrays into nonexistent bracket-wrapped paths (ADVICE r3).
+    * `OPTIONS (paths '...')` DDL.
     */
   def parsePaths(raw: String): Seq[String] =
     if (raw.trim.startsWith("["))
@@ -164,198 +148,112 @@ private[sources] object EmblScanBuilder {
     else raw.split(",").toSeq
 }
 
-/** Built by the optimizer, where the active session is the querying
-  * one; it is kept, since listing, packing and the reader factory must
-  * all obey that session's conf even when another session is active at
-  * execution time.
+/** S1/S2/S3 at listing time, once per scan: recursive walk, `*.dat.gz`
+  * glob and the division prune, then the pushed `file_path` filters per
+  * [[listFiles]] call. Spark's `InMemoryFileIndex` does the walk: it
+  * skips `_`/`.`-prefixed names, lists wide trees in parallel and
+  * builds no owner/permission-bearing `LocatedFileStatus` per file (on
+  * the local FS that copy forks a shell per file). One index per root,
+  * so a root given twice is read twice, where a single index over all
+  * roots would merge them. The walk lists a nonexistent root as empty;
+  * here that is an error (matching `spark.read.parquet`), while an
+  * existing but empty tree is a clean zero-partition scan.
   */
-private[sources] class EmblScan(
-    roots: Seq[String], divisionPrune: Boolean, required: StructType,
-    pathFilters: Array[Filter] = Array.empty,
-    metrics: Option[SegMetrics] = None,
-    spark: SparkSession = SparkSession.active)
-    extends Scan with Batch with SupportsReportStatistics {
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-  override def description(): String =
-    s"EmblScan(roots=${roots.mkString(",")}, prune=$divisionPrune, " +
-      s"columns=${required.fieldNames.mkString(",")})"
+private[sources] class EmblFileIndex(
+    spark: SparkSession, roots: Seq[String], divisionPrune: Boolean)
+    extends PartitioningAwareFileIndex(spark, Map.empty, None) {
+  override def rootPaths: Seq[HPath] = roots.map(new HPath(_))
 
-  /** S1/S2/S3 at listing time, once per scan: recursive walk, `*.dat.gz`
-    * glob, divisional filename prune, `file_path` filters. Spark's
-    * `InMemoryFileIndex` does the walk: it skips `_`/`.`-prefixed names,
-    * lists wide trees in parallel and builds no owner/permission-bearing
-    * `LocatedFileStatus` per file (on the local FS that copy forks a
-    * shell per file). One index per root, so a root given twice is read
-    * twice. The index lists a nonexistent root as empty; here that is
-    * an error (matching `spark.read.parquet`), while an existing but
-    * empty tree is a clean zero-partition scan.
-    */
   private lazy val files: Seq[FileStatus] = {
-    val conf = spark.sessionState.newHadoopConf()
-    val tokenRe = EnaPipeline.DivisionTokenRegex.r
-    val listing = Map("recursiveFileLookup" -> "true", "pathGlobFilter" -> "*.dat.gz")
-    roots.flatMap { root =>
-      val p = new HPath(root)
-      val fs = p.getFileSystem(conf)
+    val keep = EmblFileIndex.pathMatcher(
+      if (divisionPrune) Seq(PlanDataset.expression(EnaPipeline.DivisionPrune)) else Nil)
+    rootPaths.flatMap { p =>
+      val fs = p.getFileSystem(hadoopConf)
       if (!fs.exists(p))
-        throw new FileNotFoundException(s"embl source root does not exist: $root")
-      new InMemoryFileIndex(spark, Seq(fs.makeQualified(p)), listing, None)
-        .allFiles()
-        .filter { f =>
-          val path = f.getPath.toString
-          // reference semantics (dask_tasks.py:82-85): only files whose
-          // DIRECTORY path contains "sequence" are division-pruned
-          (!divisionPrune || !path.matches(".*sequence.*/.*") ||
-            tokenRe.findFirstIn(path).isDefined) && matchesPathFilters(path)
-        }
-        .sortBy(_.getPath.toString)
+        throw new FileNotFoundException(s"embl source root does not exist: $p")
+      new InMemoryFileIndex(spark, Seq(fs.makeQualified(p)), EmblFileIndex.Listing, None)
+        .allFiles().filter(keep).sortBy(_.getPath.toString)
     }
   }
 
-  private def matchesPathFilters(f: String): Boolean =
-    pathFilters.forall {
-      case EqualTo("file_path", v) => f == v.toString
-      case StringContains("file_path", v) => f.contains(v)
-      case StringStartsWith("file_path", v) => f.startsWith(v)
-      case StringEndsWith("file_path", v) => f.endsWith(v)
-      case _ => true
-    }
+  override def allFiles(): Seq[FileStatus] = files
 
-  /** Spark's file-source packing over whole files: largest first, each
-    * file charged its length plus `openCostInBytes`, partitions closed
-    * at `FilePartition.maxSplitBytes`. Many small files share a task;
-    * one large file gets a task of its own.
-    */
-  override def planInputPartitions(): Array[InputPartition] = {
-    val maxSplit = FilePartition.maxSplitBytes(spark,
-      Seq(PartitionDirectory(InternalRow.empty, files.toArray)))
-    val whole = files.sortBy(-_.getLen).map { f =>
-      PartitionedFileUtil.getPartitionedFile(
-        FileStatusWithMetadata(f), f.getPath, InternalRow.empty, 0, f.getLen)
-    }
-    FilePartition.getFilePartitions(spark, whole, maxSplit).toArray
-  }
+  override def listFiles(
+      partitionFilters: Seq[Expression], dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
+    Seq(PartitionDirectory(InternalRow.empty,
+      files.filter(EmblFileIndex.pathMatcher(dataFilters)).toArray))
 
-  /** The file source's estimate: listed bytes times the session's
-    * compression factor, so the planner sizes joins over this relation
-    * as it sized them over the text scan.
-    */
-  override def estimateStatistics(): Statistics = {
-    val bytes = (spark.sessionState.conf.fileCompressionFactor *
-      files.map(_.getLen).sum).toLong
-    new Statistics {
-      override def sizeInBytes(): OptionalLong = OptionalLong.of(bytes)
-      override def numRows(): OptionalLong = OptionalLong.empty()
-    }
-  }
+  override def partitionSpec(): PartitionSpec = PartitionSpec.emptySpec
+  override protected def leafFiles: mutable.LinkedHashMap[HPath, FileStatus] =
+    mutable.LinkedHashMap.from(files.map(f => f.getPath -> f))
+  override protected def leafDirToChildrenFiles: Map[HPath, Array[FileStatus]] =
+    files.groupBy(_.getPath.getParent).map { case (d, fs) => d -> fs.toArray }
+  override def refresh(): Unit = ()
+}
 
-  /** The session Hadoop conf is captured HERE, at planning time, and
-    * broadcast once per scan, as `FileSourceScanExec` does: a blank
-    * `new Configuration()` on the reader side would silently drop every
-    * session-level `spark.hadoop.*` setting — S3 credentials,
-    * endpoints, custom FS impls — so remote filesystems would list
-    * while planning but fail to open in tasks. The corrupt/missing-file
-    * policies are read here too, as `FileScanRDD` reads them.
+private object EmblFileIndex {
+  val Listing = Map("recursiveFileLookup" -> "true", "pathGlobFilter" -> "*.dat.gz")
+
+  /** The predicates among `filters` that read `file_path` alone, as one
+    * test on a listed file: every row of a file carries its path, so
+    * such a predicate keeps or drops the whole file. Any other
+    * predicate passes every file; Spark applies all pushed filters
+    * again above the scan.
     */
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val sqlConf = spark.sessionState.conf
-    new EmblReaderFactory(required,
-      spark.sparkContext.broadcast(
-        new SerializableConfiguration(spark.sessionState.newHadoopConf())),
-      sqlConf.ignoreCorruptFiles, sqlConf.ignoreMissingFiles, metrics)
+  def pathMatcher(filters: Seq[Expression]): FileStatus => Boolean = {
+    val onPath = filters.filter { f =>
+      val cols = f.collect { case a: Attribute => a.name }
+      cols.nonEmpty && cols.forall(_ == "file_path")
+    }
+    if (onPath.isEmpty) _ => true
+    else {
+      val p = Predicate.createInterpreted(onPath.reduce(And).transform {
+        case _: Attribute => BoundReference(0, StringType, nullable = true)
+      })
+      f => p.eval(InternalRow(UTF8String.fromString(f.getPath.toString)))
+    }
   }
 }
 
-private[sources] class EmblReaderFactory(
-    required: StructType,
+private[sources] case class EmblScan(
+    sparkSession: SparkSession,
+    fileIndex: PartitioningAwareFileIndex,
+    readDataSchema: StructType,
+    partitionFilters: Seq[Expression],
+    dataFilters: Seq[Expression],
+    metrics: Option[SegMetrics]) extends FileScan {
+  override def dataSchema: StructType = EmblDataSource.Schema
+  override def readPartitionSchema: StructType = new StructType()
+  override def isSplitable(path: HPath): Boolean = false
+
+  /** The session Hadoop conf is captured here, at planning time, and
+    * broadcast once per scan, as Spark's file sources do: a blank
+    * `Configuration` on the reader side would drop every session-level
+    * `spark.hadoop.*` setting (S3 credentials, endpoints, custom FS
+    * impls), so remote filesystems would list but fail to open in tasks.
+    */
+  override def createReaderFactory(): PartitionReaderFactory =
+    EmblReaderFactory(readDataSchema, sparkSession.sparkContext.broadcast(
+      new SerializableConfiguration(sparkSession.sessionState.newHadoopConf())), metrics)
+}
+
+/** Reads one gzip EMBL file as loci: its lines, in order, through one
+  * segmenter, emitting only the pruned columns. O(one record) memory.
+  * A read that fails partway ends the file's iterator before the record
+  * in flight is emitted, so `ignoreCorruptFiles` keeps exactly the
+  * file's complete records.
+  */
+private[sources] case class EmblReaderFactory(
+    readDataSchema: StructType,
     confBc: Broadcast[SerializableConfiguration],
-    ignoreCorruptFiles: Boolean,
-    ignoreMissingFiles: Boolean,
-    metrics: Option[SegMetrics])
-    extends PartitionReaderFactory {
+    metrics: Option[SegMetrics]) extends FilePartitionReaderFactory {
+  // reads both ignore flags from the session conf, here on the driver
+  override val options: FileSourceOptions = new FileSourceOptions(Map.empty[String, String])
+
   def conf: SerializableConfiguration = confBc.value
 
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new EmblPartitionReader(
-      partition.asInstanceOf[FilePartition].files.toSeq.map(_.toPath),
-      required, conf.value, ignoreCorruptFiles, ignoreMissingFiles, metrics)
-}
-
-/** Streams a partition's gzip EMBL files, in order, through ONE
-  * segmentation state machine (it flushes a record on file change),
-  * emitting only the pruned columns. O(one record) memory.
-  *
-  * A file that cannot be read fails the task with an error naming it,
-  * unless the session ignores such files: a missing file
-  * (`spark.sql.files.ignoreMissingFiles`) is skipped, and a corrupt or
-  * truncated one (`spark.sql.files.ignoreCorruptFiles`) ends where the
-  * read failed — its complete records are kept, the record in flight is
-  * dropped. A missing file fails even when corrupt files are ignored,
-  * as in `FileScanRDD`.
-  */
-private[sources] class EmblPartitionReader(
-    files: Seq[HPath], required: StructType,
-    conf: org.apache.hadoop.conf.Configuration,
-    ignoreCorruptFiles: Boolean, ignoreMissingFiles: Boolean,
-    metrics: Option[SegMetrics])
-    extends PartitionReader[InternalRow] {
-
-  private var open: BufferedReader = _
-
-  private def closeOpen(): Unit =
-    if (open != null) { open.close(); open = null }
-
-  /** One file's `(path, line)` rows; a `null` line ends a file whose
-    * read failed partway (see [[EmblSegmenter.segment]]). */
-  private def lines(file: HPath): Iterator[(String, String)] = {
-    val path = file.toString
-    new Iterator[(String, String)] {
-      private var line: String = _
-      private var ready = false // `line` is the next row's
-      private var done = false
-
-      private def advance(): Unit = try {
-        if (open == null) {
-          val in = file.getFileSystem(conf).open(file)
-          open = try new BufferedReader(new InputStreamReader(
-            new GZIPInputStream(in), "UTF-8"))
-          catch { case e: Throwable => in.close(); throw e } // bad gzip header
-        }
-        line = open.readLine()
-        if (line == null) finish() else ready = true
-      } catch {
-        case e: FileNotFoundException if ignoreMissingFiles =>
-          EmblPartitionReader.log.warn(s"Skipped missing file: $path", e)
-          finish()
-        case e @ (_: RuntimeException | _: IOException)
-            if ignoreCorruptFiles && !e.isInstanceOf[FileNotFoundException] =>
-          EmblPartitionReader.log.warn(s"Skipped the rest of the corrupted file: $path", e)
-          finish()
-          line = null
-          ready = true
-        case e @ (_: RuntimeException | _: IOException) =>
-          throw new IOException(s"Encountered error while reading EMBL file $path", e)
-      }
-
-      private def finish(): Unit = { done = true; closeOpen() }
-
-      override def hasNext: Boolean = {
-        if (!ready && !done) advance()
-        ready
-      }
-      override def next(): (String, String) = {
-        if (!hasNext) throw new NoSuchElementException(path)
-        ready = false
-        (path, line)
-      }
-    }
-  }
-
-  private val loci = EmblSegmenter.segment(files.iterator.flatMap(lines), metrics)
-
   // column-pruned projection: required field name -> LocusRow getter
-  private val getters: Array[LocusRow => Any] = required.fieldNames.map {
+  @transient private lazy val getters: Array[LocusRow => Any] = readDataSchema.fieldNames.map {
     case "file_path" => (r: LocusRow) => UTF8String.fromString(r.file_path)
     case "ena_id" => (r: LocusRow) => UTF8String.fromString(r.ena_id)
     case "chr_struct" => (r: LocusRow) => r.chr_struct
@@ -371,17 +269,26 @@ private[sources] class EmblPartitionReader(
     case other => throw new IllegalArgumentException(s"unknown column $other")
   }
 
-  private var current: LocusRow = _
-
-  override def next(): Boolean =
-    if (loci.hasNext) { current = loci.next(); true } else false
-
-  override def get(): InternalRow =
-    new GenericInternalRow(getters.map(g => g(current)): Array[Any])
-
-  override def close(): Unit = closeOpen()
-}
-
-private object EmblPartitionReader {
-  private val log = org.slf4j.LoggerFactory.getLogger(classOf[EmblPartitionReader])
+  override def buildReader(file: PartitionedFile): PartitionReader[InternalRow] = {
+    val path = file.toPath
+    val in = try path.getFileSystem(conf.value).open(path) catch {
+      // Spark's V2 reader would skip a missing file under
+      // ignoreCorruptFiles alone; like FileScanRDD, only
+      // ignoreMissingFiles skips one
+      case e: FileNotFoundException if !options.ignoreMissingFiles =>
+        throw new SparkException(s"EMBL file does not exist: ${file.urlEncodedPath}", e)
+    }
+    // Hadoop's LineReader hands out every complete line it decoded
+    // before a read error; a java.io Reader drops the chunk in hand
+    val reader = try new LineReader(new GZIPInputStream(in))
+      catch { case e: Throwable => in.close(); throw e } // bad gzip header
+    val line = new Text()
+    val name = path.toString
+    val lines = Iterator.continually(reader.readLine(line)).takeWhile(_ > 0)
+      .map(_ => (name, line.toString))
+    new PartitionReaderFromIterator[InternalRow](EmblSegmenter.segment(lines, metrics)
+        .map(l => new GenericInternalRow(getters.map(g => g(l))))) {
+      override def close(): Unit = reader.close()
+    }
+  }
 }

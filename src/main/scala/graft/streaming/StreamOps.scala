@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
-import graft.embl.{EmblSegmenter, LocusRow, SegMetrics}
+import graft.embl.{EnaPipeline, LocusRow, SegMetrics}
 
 /** Structured Streaming surface (SURVEY.md §2.10). The reference is
   * pure batch, so nothing here is required for parity — this is the
@@ -215,25 +215,16 @@ object StreamOps {
       roots: Seq[String],
       applyDivisionPrune: Boolean = true,
       metrics: Option[SegMetrics] = None): Dataset[LocusRow] = {
-    import spark.implicits._
-    import graft.embl.EnaPipeline.DivisionTokenRegex
-
-    def read(root: String): Dataset[(String, String)] =
+    def read(root: String): DataFrame =
       spark.readStream
         .option("recursiveFileLookup", "true")
         .option("pathGlobFilter", "*.dat.gz")
         .text(root) // streaming text source takes one root; union the rest
         .select(input_file_name().as("file_path"), col("value"))
-        .as[(String, String)]
 
     val text = roots.tail.foldLeft(read(roots.head))((acc, r) => acc.union(read(r)))
-    val pruned =
-      if (applyDivisionPrune) // S3, the predicate EmblScan applies at listing
-        text.filter(
-          !col("file_path").rlike("sequence.*/") ||
-            col("file_path").rlike(DivisionTokenRegex))
-      else text
-    pruned.mapPartitions(it => EmblSegmenter.segment(it, metrics))
+    val pruned = if (applyDivisionPrune) text.filter(EnaPipeline.DivisionPrune) else text
+    EnaPipeline.segmentLines(spark, pruned, metrics)
   }
 
   /** ST10 (r11) — streaming heavy hitters: the Space-Saving aggregate

@@ -15,7 +15,6 @@ object JobCount {
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     graft.functions.GraftFunctions.ensureRegistered(spark)
-    spark.conf.set("spark.graft.harness.fanOutSmallScans", "true")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
     @volatile var jobs = List.empty[(Int, Long)]

@@ -1,13 +1,18 @@
 package org.apache.spark.sql
 
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
-/** A DataFrame over a hand-built logical plan. `Dataset.ofRows` is
-  * private to Spark's SQL package; this lets a source hand Spark a
-  * relation it built itself (for example a DSv2 table carrying
-  * accumulators, which no option string can express).
+/** Bridges between the public API and Catalyst that Spark keeps private
+  * to its SQL package. `ofRows` lets a source hand Spark a relation it
+  * built itself (for example a DSv2 table carrying accumulators, which
+  * no option string can express); `expression` lets a source evaluate a
+  * `Column` predicate itself, as a file index does per listed file.
   */
 object PlanDataset {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  def expression(column: Column): Expression =
+    classic.ColumnNodeToExpressionConverter(column.node)
 }

@@ -8,10 +8,11 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkSpec
-import graft.embl.{EmblSegmenter, EnaPipeline, FlagshipFixture}
+import graft.embl.{EnaPipeline, FlagshipFixture}
 
 class EmblDataSourceSpec extends AnyFunSuite with SparkSpec {
 
@@ -87,7 +88,8 @@ class EmblDataSourceSpec extends AnyFunSuite with SparkSpec {
   test("column pruning pushes into the reader") {
     val df = spark.read.format("embl").load(root).select("ena_id")
     val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("columns=ena_id"), s"scan should list pruned columns:\n$plan")
+    assert(plan.contains("ReadSchema: struct<ena_id:string>"),
+      s"scan should list pruned columns:\n$plan")
     assert(df.count() > 0)
   }
 
@@ -95,6 +97,15 @@ class EmblDataSourceSpec extends AnyFunSuite with SparkSpec {
     val df = spark.read.format("embl")
       .option("divisionPrune", "false").load(root)
       .filter(col("file_path").contains("wgs"))
+    assert(df.rdd.getNumPartitions === 1) // 1 of 3 files survives listing
+    val ids = df.select("ena_id").distinct().collect().map(_.getString(0)).toSet
+    assert(ids === Set("WGS01"))
+  }
+
+  test("any file_path predicate prunes whole files at listing time") {
+    val df = spark.read.format("embl")
+      .option("divisionPrune", "false").load(root)
+      .filter(col("file_path").rlike("/wgs/"))
     assert(df.rdd.getNumPartitions === 1) // 1 of 3 files survives listing
     val ids = df.select("ena_id").distinct().collect().map(_.getString(0)).toSet
     assert(ids === Set("WGS01"))
@@ -122,8 +133,9 @@ class EmblDataSourceSpec extends AnyFunSuite with SparkSpec {
     // a blank Configuration on the reader side would drop session
     // spark.hadoop.* settings (S3 creds, custom FS impls)
     spark.sparkContext.hadoopConfiguration.set("graft.test.marker", "propagated")
-    val scan = new EmblScan(Seq(root), divisionPrune = true, EmblDataSource.Schema)
-    val factory = scan.createReaderFactory().asInstanceOf[EmblReaderFactory]
+    val scan = new EmblTable(Map("path" -> root))
+      .newScanBuilder(CaseInsensitiveStringMap.empty()).build()
+    val factory = scan.toBatch.createReaderFactory().asInstanceOf[EmblReaderFactory]
     assert(factory.conf.value.get("graft.test.marker") === "propagated")
   }
 
@@ -226,12 +238,26 @@ class EmblDataSourceSpec extends AnyFunSuite with SparkSpec {
     withConf("spark.sql.files.ignoreCorruptFiles" -> "true") {
       assert(loci(spark.read.format("embl").load(notGz.toString)).map(_._2) === Set("GOOD1"))
     }
-    // the record in flight when a file is cut short is dropped
-    val rows = Iterator(("f", "ID   A1; SV 1; linear; genomic DNA; WGS; PRO; 900 BP."),
-      ("f", "FT   CDS             1..100"), ("f", null),
-      ("g", "ID   B1; SV 1; linear; genomic DNA; WGS; PRO; 900 BP."),
-      ("g", "FT   CDS             5..50"))
-    assert(EmblSegmenter.segment(rows).map(_.ena_id).toSeq === Seq("B1"))
+    // the record in flight when a file is cut short is dropped: the
+    // file ends right after record k's complete CDS line, enough for a
+    // whole locus had the file ended there
+    val k = 30
+    val cutTree = Files.createTempDirectory("embl_cut_in_flight")
+    val cut = cutTree.resolve("wgs/public/cut/C.dat.gz")
+    Files.createDirectories(cut.getParent)
+    val bytes = new java.io.ByteArrayOutputStream()
+    val gz = new GZIPOutputStream(bytes, true)
+    val upToCds = (0 until k).map(i => record(f"CF$i%03d", 1 + i)).mkString +
+      record(f"CF$k%03d", 1 + k).linesWithSeparators.take(3).mkString
+    assert(upToCds.linesIterator.toSeq.last.startsWith("FT   CDS "))
+    gz.write(upToCds.getBytes("UTF-8"))
+    gz.flush() // sync flush: all of it is readable from the flushed bytes
+    Files.write(cut, bytes.toByteArray) // the cut: no trailer, no end of stream
+    gz.close()
+    withConf("spark.sql.files.ignoreCorruptFiles" -> "true") {
+      val ids = loci(spark.read.format("embl").load(cutTree.toString)).map(_._2)
+      assert(ids === (0 until k).map(i => f"CF$i%03d").toSet)
+    }
   }
 
   test("a file removed after listing fails the read unless ignoreMissingFiles") {
