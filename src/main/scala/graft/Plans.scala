@@ -126,7 +126,7 @@ object Plans {
     "q128_bpe_train" ->
       "BPE training (r13): the plan shown is the learned table's LocalRelation tail — the training itself is the histogram trick (one corpus scan to a vocabulary-sized (word, count) agg, then an n-merge loop over the histogram, driver-side under the probe / distributed keyed pair-count aggregates above it). Nothing corpus-sized ever iterates",
     "q150_lm_rare_transitions" ->
-      "bigram-LM quality score (r16; hashed keys + one-scan model + count-map probe r17): bigrams assemble per-row with zip_with over the CONCRETE token-hash array inside codegen (no position self-join, no Filter carrying the gram pipeline — short docs drop via a when-guarded empty array under the explode) as ONE packed 62-bit long (h1*2^31 + h2; the unigram context key is bg >> 31, recovered for free), so strings never leave their scan task. The model builds in ONE reference scan (unigram + bigram keys through a single keyed agg, train-vocab-bounded) and is dual-regime on a bounded row probe: bounded models compile into the EXACT broadcast count map (graft.functions.LongCountMap, memoized per plan+source like the Bloom/IVF artifacts) and the corpus pass is JOIN-FREE — three codegen'd O(1) probes per bigram in a regular projection (never a higher-order-function lambda: HOFs are CodegenFallback), one map-side-combined per-doc agg as the only exchange; oversized/forced models keep the shuffle join behind the distinct pre-agg. The rare test is pure integer comparisons — nothing quadratic, nothing data-sized collected, no log anywhere. sf1: 2.52 -> 0.70 s, parity with the DuckDB oracle",
+      "bigram-LM quality score (r16; hashed keys + one-scan model + count-map probe r17): bigrams assemble per-row with zip_with over the CONCRETE token-hash array inside codegen (no position self-join, no Filter carrying the gram pipeline — short docs drop via a when-guarded empty array under the explode) as ONE packed 62-bit long (h1*2^31 + h2; the unigram context key is bg >> 31, recovered for free), so strings never leave their scan task. The model builds in ONE reference scan (unigram + bigram keys through a single keyed agg, train-vocab-bounded) and is dual-regime on a bounded row probe: bounded models compile into the EXACT broadcast count map (graft.functions.LongCountMap, built per call) and the corpus pass is JOIN-FREE — three codegen'd O(1) probes per bigram in a regular projection (never a higher-order-function lambda: HOFs are CodegenFallback), one map-side-combined per-doc agg as the only exchange; oversized/forced models keep the shuffle join behind the distinct pre-agg. The rare test is pure integer comparisons — nothing quadratic, nothing data-sized collected, no log anywhere. sf1: 2.52 -> 0.70 s, parity with the DuckDB oracle",
     "q146_increment_flagship" ->
       "increment gate (r16; fused r17): history index built once (never re-signed); the increment's distinct gram frame is checkpointed and feeds contamination AND familiarity in ONE kernel pass (eval membership = left-join marker, history document frequency = left-joined posting-list counts, both folded into a single doc_id aggregation); the verdict frame localCheckpoints so the keep-list fed to trainingOrder and the final join both read materialized rows instead of re-running the probe stack; order assignment rides the two-phase prefix sum. Every stage equi-keyed; the only pair generation is the capped banded probe",
     "q155_zorder3_key" ->

@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, PlanDataset}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
@@ -224,38 +224,33 @@ object BloomAgg {
     ((readInt(b, off) & 0xFFFFFFFFL) << 32) |
       (readInt(b, off + 4) & 0xFFFFFFFFL)
 
-  /** Register a probe function bound to a BROADCAST filter handle and
-    * return its session-unique name (`graft_bloom_probe_b<id>`), for
-    * `call_function(name, keyCol)`.
+  /** The membership probe for a BROADCAST filter handle, as a
+    * `Column` builder: `probe(bc)(keyCol)` is a [[BloomProbe]] over the
+    * key's expression.
     *
     * Why a separate delivery path exists next to [[BloomContains]]:
     * a filter is MBs (2 MB at 2²⁴ bits, ~120 MB at 10⁹ keys/1% FP),
     * and the two "pass it as data" deliveries both collapse at that
     * size — a plan `Literal` is deep-hashed by every optimizer pass
-    * (seconds of pure plan time, measured r15), and a one-row
-    * broadcast-joined COLUMN pays `UnsafeRow.getBinary`'s defensive
-    * copy of the whole filter on EVERY probed row (r15 bisect at
-    * sf0.1/2²⁴ bits: 12.3 s vs 1.3 s for the identical aggregation
-    * without the probe). A [[Broadcast]] handle inside the expression
-    * is the delivery that scales: the bytes ship torrent-broadcast
-    * once per executor, the generated code caches `bc.value()` in a
-    * mutable slot on first touch, and each row pays only the k-probe
-    * bit test. The builder closure capturing the handle is why this
-    * registers per-filter rather than living in
-    * [[GraftFunctions.allFunctions]].
+    * (seconds of pure plan time), and a one-row broadcast-joined
+    * COLUMN pays `UnsafeRow.getBinary`'s defensive copy of the whole
+    * filter on EVERY probed row (at sf0.1/2²⁴ bits: 12.3 s vs 1.3 s
+    * for the identical aggregation without the probe). A [[Broadcast]]
+    * handle inside the expression is the delivery that scales: the
+    * bytes ship torrent-broadcast once per executor, the generated
+    * code caches `bc.value()` in a mutable slot on first touch, and
+    * each row pays only the k-probe bit test.
     *
-    * Registry lifetime: the entry (and through it the broadcast) lives
-    * until the session ends; ids are unique per SparkContext so
-    * re-registration under one name is always the same filter
-    * (idempotent). There is deliberately NO unregister/destroy path —
-    * a live lazy plan may still reference the probe — so CALLERS that
-    * build repeatedly must memoize the built name per source
-    * fingerprint (the [[graft.llm.Decontaminate.buildGramBloomProbe]]
-    * convention) rather than re-building per call.
+    * Lifetime: the expression rides the `Column`, so every plan built
+    * from it holds the broadcast, and nothing else does — no session
+    * registry entry pins it. Once the last such plan (and the
+    * caller's handle) is unreachable, Spark's `ContextCleaner` frees
+    * the broadcast. A caller that serves many corpora from one filter
+    * keeps the returned builder; a caller that builds again gets a
+    * fresh filter over the sources as they are now.
     */
-  def registerProbe(spark: SparkSession, bc: Broadcast[Array[Byte]]): String =
-    GraftFunctions.registerHandleProbe(spark, s"graft_bloom_probe_b${bc.id}",
-      classOf[BloomProbe], BloomProbe(bc, _))
+  def probe(bc: Broadcast[Array[Byte]]): Column => Column =
+    key => PlanDataset.column(BloomProbe(bc, PlanDataset.expression(key)))
 }
 
 /** `graft_bloom_contains(filter BINARY, key BIGINT)` → BOOLEAN: per-row
@@ -294,13 +289,12 @@ case class BloomContains(filter: Expression, key: Expression)
 }
 
 /** Broadcast-handle twin of [[BloomContains]] — the probe for filters
-  * too big to travel as data (see [[BloomAgg.registerProbe]] for the
-  * delivery analysis). The filter bytes are NOT a child expression:
-  * they ride `bc`, fetched from the executor's block manager once and
-  * cached in a codegen mutable slot, so per-row cost is exactly the
-  * k-bit test regardless of filter size. Rows-level delivery of the
-  * same bytes pays a full-filter copy per row (`UnsafeRow.getBinary`)
-  * — the r15 q130 pathology.
+  * too big to travel as data (see [[BloomAgg.probe]] for the delivery
+  * analysis). The filter bytes are NOT a child expression: they ride
+  * `bc`, fetched from the executor's block manager once and cached in
+  * a codegen mutable slot, so per-row cost is exactly the k-bit test
+  * regardless of filter size. Rows-level delivery of the same bytes
+  * pays a full-filter copy per row (`UnsafeRow.getBinary`).
   */
 case class BloomProbe(bc: Broadcast[Array[Byte]], key: Expression)
     extends UnaryExpression {

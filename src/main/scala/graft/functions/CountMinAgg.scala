@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, PlanDataset}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
@@ -206,19 +206,19 @@ object CountMinAgg {
     grid
   }
 
-  /** Register a probe bound to a BROADCAST grid handle and return its
-    * session-unique name (`graft_cms_probe_b<id>`) — the corpus-scale
-    * delivery, same analysis as [[BloomAgg.registerProbe]]: a grid is
-    * MBs (512 KB at 4×16k, 32 MB at the cap), and per-row column
-    * delivery pays `UnsafeRow.getBinary`'s full-image copy on every
-    * probed row while a plan literal is deep-hashed by every optimizer
-    * pass. The handle ships once per executor; generated code caches
-    * `bc.value()` in a mutable slot; each row pays `depth` counter
-    * reads. Use [[CmsQuery]] for report-sized probe sides instead.
+  /** The point query for a BROADCAST grid handle as a `Column`
+    * builder: `probe(bc)(keyCol)` is a [[CmsProbe]] over the key — the
+    * corpus-scale delivery, same analysis and lifetime as
+    * [[BloomAgg.probe]]: a grid is MBs (512 KB at 4×16k, 32 MB at the
+    * cap), and per-row column delivery pays `UnsafeRow.getBinary`'s
+    * full-image copy on every probed row while a plan literal is
+    * deep-hashed by every optimizer pass. The handle ships once per
+    * executor; generated code caches `bc.value()` in a mutable slot;
+    * each row pays `depth` counter reads. Use [[CmsQuery]] for
+    * report-sized probe sides instead.
     */
-  def registerProbe(spark: SparkSession, bc: Broadcast[Array[Byte]]): String =
-    GraftFunctions.registerHandleProbe(spark, s"graft_cms_probe_b${bc.id}",
-      classOf[CmsProbe], CmsProbe(bc, _))
+  def probe(bc: Broadcast[Array[Byte]]): Column => Column =
+    key => PlanDataset.column(CmsProbe(bc, PlanDataset.expression(key)))
 
   /** Static probe kernel for [[CmsQuery]]'s generated code — reads the
     * serialized image directly (two header ints + `depth` counter
@@ -339,7 +339,7 @@ case class CmsMerge(a: Expression, b: Expression) extends BinaryExpression {
   * counters; never undercounts). Codegen'd straight off the
   * serialized image — no per-row deserialization.
   *
-  * Delivery contract (the [[BloomAgg.registerProbe]] analysis): a
+  * Delivery contract (the [[BloomAgg.probe]] analysis): a
   * sketch COLUMN is read per row with a full-image copy, so this form
   * is for REPORT-SIZED probe sides — a top-k key list against a
   * one-row grid, or per-group grids probed once per group. A
@@ -376,7 +376,7 @@ case class CmsQuery(sketch: Expression, key: Expression)
 }
 
 /** Broadcast-handle twin of [[CmsQuery]] — the probe for grids too
-  * big to travel as data (see [[CountMinAgg.registerProbe]]). The
+  * big to travel as data (see [[CountMinAgg.probe]]). The
   * grid bytes ride `bc`, fetched from the executor's block manager
   * once and cached in a codegen mutable slot, so per-row cost is
   * exactly the `depth` counter reads regardless of grid size — the

@@ -229,30 +229,6 @@ object GraftFunctions {
   /** Hook for [[GraftExtensions]]. */
   private[functions] def inject(ext: SparkSessionExtensions): Unit =
     allFunctions.foreach(ext.injectFunction)
-
-  /** The shared registry dance for broadcast-handle probe functions
-    * ([[BloomAgg.registerProbe]] / [[CountMinAgg.registerProbe]]):
-    * one idempotent per-name registration whose builder closure
-    * injects the captured handle into a single-key expression. Lives
-    * here so the two (and any future) sketch probes cannot drift.
-    */
-  private[functions] def registerHandleProbe(
-      spark: SparkSession,
-      name: String,
-      exprClass: Class[_],
-      build: Expression => Expression): String = {
-    val id = FunctionIdentifier(name)
-    val registry = spark.sessionState.functionRegistry
-    if (!registry.functionExists(id)) {
-      registry.registerFunction(id,
-        new ExpressionInfo(exprClass.getName, name),
-        (args: Seq[Expression]) => {
-          require(args.length == 1, s"$name expects exactly 1 key argument")
-          build(args.head)
-        })
-    }
-    name
-  }
 }
 
 /** `spark.sql.extensions` entry point: registers the engine's native

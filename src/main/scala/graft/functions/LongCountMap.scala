@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, PlanDataset}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -28,12 +28,13 @@ import org.apache.spark.sql.types.{DataType, LongType}
   * absent keys return 0 — the natural identity for counts (mirrors the
   * join form's `coalesce(c, 0)`).
   *
-  * Delivery contract is [[BloomAgg.registerProbe]]'s: the image rides
-  * a broadcast HANDLE bound into a registered probe function (a plan
-  * literal is re-hashed by every optimizer pass; a joined one-row
-  * column pays a defensive copy per row). The generated code caches
-  * the dereferenced array in a mutable slot, so the per-row cost is
-  * the mix + a short probe chain.
+  * Delivery contract is [[BloomAgg.probe]]'s: the image rides a
+  * broadcast HANDLE inside the probe expression (a plan literal is
+  * re-hashed by every optimizer pass; a joined one-row column pays a
+  * defensive copy per row), and the plans built from the probe column
+  * own the broadcast. The generated code caches the dereferenced array
+  * in a mutable slot, so the per-row cost is the mix + a short probe
+  * chain.
   */
 object LongCountMap {
 
@@ -49,9 +50,9 @@ object LongCountMap {
     * (`cap` = next power of two with load ≤ 0.7, array of `1 + 2·cap`
     * longs) still fits a JVM array — cap tops out at 2²⁹ slots, so
     * n ≤ 0.7·2²⁹. Guarded loudly because the sizing loop below runs
-    * in Long arithmetic but the ARRAY length is an Int (r17 ADVICE:
-    * the old Int-arithmetic loop wrapped `n * 10` negative past
-    * ~214M pairs and then linear-probed a full 2-slot table forever).
+    * in Long arithmetic but the ARRAY length is an Int (an Int-
+    * arithmetic loop wraps `n * 10` negative past ~214M pairs and then
+    * linear-probes a full 2-slot table forever).
     */
   val MaxPairs: Int = ((1L << 29) * 7 / 10).toInt
 
@@ -98,12 +99,11 @@ object LongCountMap {
     0L // unreachable: the <= 0.7 load factor guarantees empty slots
   }
 
-  /** Register a probe bound to a broadcast image; returns the function
-    * name for `call_function(name, keyCol)`.
+  /** The lookup for a broadcast image as a `Column` builder:
+    * `probe(bc)(keyCol)` is a [[LongCountProbe]] over the key.
     */
-  def registerProbe(spark: SparkSession, bc: Broadcast[Array[Long]]): String =
-    GraftFunctions.registerHandleProbe(spark, s"graft_count_map_b${bc.id}",
-      classOf[LongCountProbe], LongCountProbe(bc, _))
+  def probe(bc: Broadcast[Array[Long]]): Column => Column =
+    key => PlanDataset.column(LongCountProbe(bc, PlanDataset.expression(key)))
 }
 
 case class LongCountProbe(bc: Broadcast[Array[Long]], key: Expression)

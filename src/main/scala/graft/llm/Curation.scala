@@ -1,6 +1,6 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The end-to-end training-data curation flagship: the single operator
@@ -239,21 +239,21 @@ object Curation {
     * benchmark-contamination fraction, each thresholded into a pass
     * boolean, all-pass rolled into `release_ok`.
     *
-    * ONE corpus scan for EVERYTHING in the probe regime (r18, was
-    * two plus three `rlike` passes — r17 VERDICT #3): PII detection is
-    * a single fused-alternation regex ([[Pii.AnyRe]]), and the
+    * ONE corpus scan for EVERYTHING in the probe regime: PII detection
+    * is a single fused-alternation regex ([[Pii.AnyRe]]), and the
     * contamination verdict is a per-row projection over the in-row
-    * distinct gram array probed against the memoized exact eval-gram
-    * count map ([[Decontaminate.buildGramSetProbe]] — the gate re-runs
-    * per release against the same eval suite, so the build amortizes
-    * to zero; values identical to the join form, the probe is exact).
+    * distinct gram array probed against the exact eval-gram count map
+    * ([[Decontaminate.buildGramSetProbe]], built once per call from the
+    * eval set as it is now; values identical to the join form, the
+    * probe is exact).
     * Per distinct content: copies, token sum, pii hits, clean copies;
     * then one global fold. n_dups = total copies − distinct contents
     * falls out of the same frame, with no countDistinct (whose
     * mixed-aggregate form Expands the input) and map-side partials
     * throughout. An oversized eval set or `forceDistributed` keeps
     * the certified two-scan form whose contamination count crossJoins
-    * in from [[Decontaminate.decontaminate]]'s join regime.
+    * in from [[Decontaminate.joinAudit]], the join regime, without
+    * probing the eval set a second time.
     */
   def releaseGate(
       docs: DataFrame,
@@ -263,14 +263,12 @@ object Curation {
       maxContamFrac: Double = 0.1,
       shingleK: Int = 3,
       maxOverlap: Double = 0.2): DataFrame = {
+    require(maxOverlap >= 0.0 && maxOverlap < 1.0,
+      "maxOverlap must be in [0, 1)")
     graft.functions.GraftFunctions.ensureRegistered(docs.sparkSession)
     val piiHit = when(col("text").rlike(Pii.AnyRe), 1L).otherwise(0L)
-    val probeName =
-      if (graft.Regimes.forceDistributed) Decontaminate.ProbeMemo.Negative
-      else Decontaminate.buildGramSetProbe(evalDocs, shingleK)
-    val stats =
-      if (probeName != Decontaminate.ProbeMemo.Negative) {
-        val hit = (g: Column) => call_function(probeName, g) > 0
+    val stats = Decontaminate.buildGramSetProbe(evalDocs, shingleK) match {
+      case Some(hit) =>
         val perRow = docs
           .select(col("text"), TextFns.tokenHashes(col("text")).as("hs"))
           .select(col("text"), size(col("hs")).as("__nt"),
@@ -304,7 +302,7 @@ object Curation {
             count(when(col("__ch").isNotNull, 1))).as("n_dups"),
           coalesce(sum(col("__pii")), lit(0L)).as("n_pii_docs"),
           coalesce(sum(col("__clean")), lit(0L)).as("n_clean"))
-      } else {
+      case None =>
         val perContent = docs
           .groupBy(md5(col("text")).as("__ch"))
           .agg(
@@ -318,11 +316,11 @@ object Curation {
           (coalesce(sum(col("__cnt")), lit(0L)) -
             count(when(col("__ch").isNotNull, 1))).as("n_dups"),
           coalesce(sum(col("__pii")), lit(0L)).as("n_pii_docs"))
-        val clean = Decontaminate
-          .decontaminate(docs, evalDocs, shingleK, maxOverlap)
+        val clean = Decontaminate.joinAudit(docs, evalDocs, shingleK)
+          .filter(col("overlap") <= maxOverlap)
           .agg(count(lit(1)).as("n_clean"))
         base.crossJoin(broadcast(clean))
-      }
+    }
     stats
       .select(col("n_docs"), col("n_tokens"),
         (col("n_dups").cast("double") / col("n_docs")).as("dup_frac"),

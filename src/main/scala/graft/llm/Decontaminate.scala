@@ -30,66 +30,6 @@ import org.apache.spark.sql.functions._
   */
 object Decontaminate {
 
-  /** Driver-side memo of BUILT probe-function names, keyed by the
-    * build input's canonicalized plan + file-source fingerprint +
-    * sketch parameters ([[Similarity.sourceVersion]]'s staleness
-    * guard: an eval set overwritten in place re-builds). Exists
-    * because a probe registration pins its broadcast for the session
-    * (there is deliberately no destroy path — live lazy plans may
-    * reference it), so repeated builds against UNCHANGED sources must
-    * reuse the one filter instead of accumulating a fresh broadcast +
-    * registry entry per call (r15 review). Bounded LRU: evicted
-    * entries only forget the memo (the next build registers a fresh
-    * id); the old entry stays valid for any plan still holding it.
-    *
-    * A hit is only valid WITHIN the session that registered the probe:
-    * the memo value is a name in that session's `FunctionRegistry`,
-    * bound to a `Broadcast` of that session's `SparkContext` (r15
-    * ADVICE — a fresh session after a `stop()` would otherwise hit a
-    * name absent from its own registry, or resolve against a dead
-    * context). The key therefore carries the session + context
-    * identity, and a hit is re-validated against the live registry so
-    * a cloned/reset registry rebuilds instead of failing at analysis.
-    */
-  private[graft] object ProbeMemo {
-    /** Distinguished memo value for a DECLINED build — "this source is
-      * oversized, stay in the join regime". Memoized like a name so
-      * repeated calls against the unchanged source skip the
-      * limit/count probe (and its checkpoint) instead of re-running
-      * them every call (r17 ADVICE: the old `""` convention never
-      * memo-hit, so every oversized call paid a fresh probe job and
-      * pinned a fresh checkpoint). The NUL bytes keep it outside any
-      * registrable function name; callers compare against it and take
-      * their distributed form.
-      */
-    val Negative = "\u0000negative-verdict\u0000"
-
-    private val cache = new java.util.LinkedHashMap[Any, String](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[Any, String]): Boolean = size > 8
-    }
-    def getOrBuild(spark: org.apache.spark.sql.SparkSession, key: Any)(
-        build: => String): String = {
-      val fullKey = (System.identityHashCode(spark.sessionState),
-        spark.sparkContext.applicationId, spark.sparkContext.startTime, key)
-      // a Negative verdict is session-scoped data, not a registry
-      // name — valid on its own; real names re-validate against the
-      // live registry (a cloned/reset registry rebuilds)
-      val hit = cache.synchronized(Option(cache.get(fullKey))).filter { n =>
-        n == Negative ||
-          spark.sessionState.functionRegistry.functionExists(
-            org.apache.spark.sql.catalyst.FunctionIdentifier(n))
-      }
-      hit match {
-        case Some(name) => name
-        case None =>
-          val name = build // outside the lock: the build runs a job
-          cache.synchronized(cache.put(fullKey, name))
-          name
-      }
-    }
-  }
-
   /** Survivors of decontaminating `docs` against `evalDocs` (both need
     * `(doc_id, text)`): one row per KEPT document —
     * `(doc_id, n_grams, n_hit, overlap)` with overlap = n_hit/n_grams
@@ -104,15 +44,11 @@ object Decontaminate {
     require(maxOverlap >= 0.0 && maxOverlap < 1.0,
       "maxOverlap must be in [0, 1)")
     graft.functions.GraftFunctions.ensureRegistered(docs.sparkSession)
-    val probeName =
-      if (graft.Regimes.forceDistributed) ProbeMemo.Negative
-      else buildGramSetProbe(evalDocs, shingleK)
-    if (probeName != ProbeMemo.Negative)
-      probeAuditKept(docs, shingleK,
-        gh => call_function(probeName, gh) > 0, maxOverlap)
-    else
-      decontaminateAudit(docs, evalDocs, shingleK)
-        .filter(col("overlap") <= maxOverlap)
+    buildGramSetProbe(evalDocs, shingleK) match {
+      case Some(hit) => probeAuditKept(docs, shingleK, hit, maxOverlap)
+      case None =>
+        joinAudit(docs, evalDocs, shingleK).filter(col("overlap") <= maxOverlap)
+    }
   }
 
   /** The unfiltered form of [[decontaminate]]: the same
@@ -120,38 +56,42 @@ object Decontaminate {
     * what an audit/report pass wants (how contaminated is the corpus,
     * and by how much per doc) before any keep rule is chosen.
     *
-    * Dual regime (r18, the q150/L128 serve-once pattern applied to the
-    * gram-audit family — r17 VERDICT #5): the common case — a BOUNDED
-    * eval gram set (benchmark suites are small by construction) —
-    * compiles the distinct eval grams into an exact
-    * [[graft.functions.LongCountMap]] broadcast probe (memoized per
-    * plan + source fingerprint: build once, audit every corpus/
-    * increment), and the corpus pass becomes a ZERO-SHUFFLE projection
-    * ([[probeAudit]]): per-row gram array, in-row distinct, probe-hit
-    * count — no gram window exchange+sort, no corpus-wide distinct, no
-    * doc_id groupBy, no join-back. Values are IDENTICAL to the join
-    * form (the probe is exact membership, not a sketch — same oracle).
-    * An OVERSIZED eval set (decontaminating against a prior training
-    * corpus) or `forceDistributed` keeps the certified join form,
-    * whose eval side shuffles instead of broadcasting.
+    * Dual regime: the common case — a BOUNDED eval gram set
+    * (benchmark suites are small by construction) — compiles the
+    * distinct eval grams into an exact [[graft.functions.LongCountMap]]
+    * broadcast probe, and the corpus pass becomes a ZERO-SHUFFLE
+    * projection ([[probeAudit]]): per-row gram array, in-row distinct,
+    * probe-hit count — no gram window exchange+sort, no corpus-wide
+    * distinct, no doc_id groupBy, no join-back. Values are IDENTICAL
+    * to the join form (the probe is exact membership, not a sketch —
+    * same oracle). An OVERSIZED eval set (decontaminating against a
+    * prior training corpus) or `forceDistributed` keeps the certified
+    * join form ([[joinAudit]]), whose eval side shuffles instead of
+    * broadcasting. Each call builds its probe from `evalDocs` as they
+    * are now; nothing is remembered between calls.
     */
   def decontaminateAudit(
       docs: DataFrame,
       evalDocs: DataFrame,
       shingleK: Int = 3): DataFrame = {
     graft.functions.GraftFunctions.ensureRegistered(docs.sparkSession)
-    val probeName =
-      if (graft.Regimes.forceDistributed) ProbeMemo.Negative
-      else buildGramSetProbe(evalDocs, shingleK)
-    if (probeName != ProbeMemo.Negative)
-      probeAudit(docs, shingleK,
-        gh => call_function(probeName, gh) > 0)
-    else
-      overlapFromGrams(
-        docs.select(col("doc_id")),
-        TextDedup.gramHashes(docs, shingleK).distinct(),
-        TextDedup.gramHashes(evalDocs, shingleK).select(col("gh")).distinct())
+    buildGramSetProbe(evalDocs, shingleK) match {
+      case Some(hit) => probeAudit(docs, shingleK, hit)
+      case None => joinAudit(docs, evalDocs, shingleK)
+    }
   }
+
+  /** [[decontaminateAudit]]'s join regime, for callers that already
+    * hold the oversized verdict and must not probe the eval set again.
+    */
+  private[llm] def joinAudit(
+      docs: DataFrame,
+      evalDocs: DataFrame,
+      shingleK: Int): DataFrame =
+    overlapFromGrams(
+      docs.select(col("doc_id")),
+      TextDedup.gramHashes(docs, shingleK).distinct(),
+      TextDedup.gramHashes(evalDocs, shingleK).select(col("gh")).distinct())
 
   /** Above this many distinct eval grams the exact membership map
     * stays in the join regime instead of compiling into a broadcast
@@ -165,41 +105,31 @@ object Decontaminate {
   private val GramSetProbeMaxRows = 2000000
 
   /** Compile `evalDocs`' DISTINCT k-gram hashes into an exact
-    * membership probe ([[graft.functions.LongCountMap]], count 1 per
-    * gram; absent → 0): returns the registered probe name, or
-    * [[ProbeMemo.Negative]] when the set exceeds `maxRows` (callers
-    * then take their join regime). Memoized per (plan, source
-    * fingerprint, bound) like every serve-many artifact — the filter
-    * builds once and every corpus/increment probed against the same
-    * unchanged eval set reuses it, including the oversized VERDICT
-    * itself (no repeated limit/count probes — the r17 LM lesson).
+    * membership test: `Some(hit)`, where `hit(gh)` is true iff the
+    * gram is in the set (a [[graft.functions.LongCountMap]] probe, count
+    * 1 per gram). `None` means "take the join regime": the set exceeds
+    * `maxRows`, or `forceDistributed` is on. One job counts the set and
+    * collects it when bounded.
     */
   private[llm] def buildGramSetProbe(
       evalDocs: DataFrame,
       shingleK: Int,
-      maxRows: Int = GramSetProbeMaxRows): String = {
-    val spark = evalDocs.sparkSession
-    graft.functions.GraftFunctions.ensureRegistered(spark)
-    val grams = TextDedup.gramHashes(evalDocs, shingleK)
-      .select(col("gh")).distinct()
-    ProbeMemo.getOrBuild(spark, ("gramset",
-        grams.queryExecution.analyzed.canonicalized,
-        Similarity.sourceVersion(grams), maxRows)) {
-      val ck = grams.localCheckpoint()
-      val bounded =
-        ck.limit(maxRows + 1).count() <= maxRows.toLong
-      val verdict =
-        if (!bounded) ProbeMemo.Negative
-        else {
-          val rows = ck.collect()
-          graft.functions.LongCountMap.registerProbe(spark,
-            spark.sparkContext.broadcast(graft.functions.LongCountMap.build(
-              rows.iterator.map(_.getLong(0) -> 1L), rows.length)))
-        }
-      graft.operators.Checkpoints.release(ck)
-      verdict
+      maxRows: Int = GramSetProbeMaxRows): Option[Column => Column] =
+    if (graft.Regimes.forceDistributed) None
+    else {
+      val spark = evalDocs.sparkSession
+      graft.functions.GraftFunctions.ensureRegistered(spark)
+      val grams = TextDedup.gramHashes(evalDocs, shingleK)
+        .select(col("gh")).distinct()
+      val (n, rows) = graft.operators.Checkpoints.countAndCollect(grams, maxRows)
+      if (n > maxRows) None
+      else {
+        val probe = graft.functions.LongCountMap.probe(
+          spark.sparkContext.broadcast(graft.functions.LongCountMap.build(
+            rows.iterator.map(_.getLong(0) -> 1L), rows.length)))
+        Some(gh => probe(gh) > 0)
+      }
     }
-  }
 
   /** The ZERO-SHUFFLE audit kernel: one row per doc with the standard
     * `(doc_id, n_grams, n_hit, overlap)` statistics, computed entirely
@@ -236,9 +166,8 @@ object Decontaminate {
     * expression tree into the pushed-down condition, so a plain
     * `.filter(overlap <= t)` over these per-row stats re-inlines the
     * entire tokenize+md5+gram+probe pipeline ~6× into one Filter node
-    * (measured 0.46 → 7.5 s on q60 at sf0.1 — the q67 lesson, hit
-    * again r18). The explode keeps every stage a single-evaluation
-    * projection.
+    * (measured 0.46 → 7.5 s on q60 at sf0.1). The explode keeps every
+    * stage a single-evaluation projection.
     */
   private[llm] def probeAuditKept(
       docs: DataFrame,
@@ -348,53 +277,47 @@ object Decontaminate {
     */
   def bloomAuditKeptWithProbe(
       docs: DataFrame,
-      probeName: String,
+      probe: Column => Column,
       shingleK: Int = 3,
       maxOverlap: Double = 0.0): DataFrame = {
     graft.functions.GraftFunctions.ensureRegistered(docs.sparkSession)
-    probeAuditKept(docs, shingleK,
-      gh => call_function(probeName, gh), maxOverlap)
+    probeAuditKept(docs, shingleK, probe, maxOverlap)
   }
 
-  /** Build the eval-side gram Bloom filter and register a probe bound
-    * to its broadcast handle; returns the probe's function name for
-    * `call_function(name, ghCol)`. Runs ONE job now (the eval-side
-    * gram scan + bitwise-OR aggregation collapsing to a single
-    * `numBits`-bit row collected on the driver) — deliberately eager:
+  /** Build the eval-side gram Bloom filter and return its membership
+    * probe ([[graft.functions.BloomAgg.probe]]): `probe(ghCol)` is the
+    * per-row bit test against the filter's broadcast handle. Runs ONE
+    * job now (the eval-side gram scan + bitwise-OR aggregation
+    * collapsing to a single `numBits`-bit row collected on the driver)
+    * — deliberately eager:
     *
     *  - the build side is the SMALL side by construction (the eval
     *    suite / prior-corpus signature), and a real pipeline builds
-    *    the filter once then probes many corpora with it — the handle
-    *    is the reusable artifact;
+    *    the filter once then probes many corpora with it — the
+    *    returned probe is the reusable handle, held by the caller;
     *  - the two lazy deliveries both collapse at real filter sizes
-    *    (r15 bisect, 2²⁴ bits, sf0.1): a plan `Literal` is deep-
-    *    hashed/equality-scanned by every optimizer pass (tens of
-    *    seconds of pure plan time), and a one-row broadcast-joined
-    *    column pays `UnsafeRow.getBinary`'s defensive copy of the
-    *    FULL filter on every probed row (12.3 s vs 1.3 s for the same
-    *    aggregation without the probe). The broadcast handle ships
-    *    the bytes once per executor and the probe caches the
-    *    deserialized reference — per-row cost is the k bit tests.
+    *    (2²⁴ bits, sf0.1): a plan `Literal` is deep-hashed/equality-
+    *    scanned by every optimizer pass (tens of seconds of pure plan
+    *    time), and a one-row broadcast-joined column pays
+    *    `UnsafeRow.getBinary`'s defensive copy of the FULL filter on
+    *    every probed row (12.3 s vs 1.3 s for the same aggregation
+    *    without the probe). The broadcast handle ships the bytes once
+    *    per executor and the probe caches the deserialized reference
+    *    — per-row cost is the k bit tests.
     */
   def buildGramBloomProbe(
       evalDocs: DataFrame,
       shingleK: Int = 3,
       numBits: Long = 1L << 22,
-      numHashes: Int = 5): String = {
+      numHashes: Int = 5): Column => Column = {
     val spark = evalDocs.sparkSession
     graft.functions.GraftFunctions.ensureRegistered(spark)
     // no distinct before the aggregate: duplicate inserts are idempotent
-    val grams = TextDedup.gramHashes(evalDocs, shingleK)
-    ProbeMemo.getOrBuild(spark, ("bloom",
-        grams.queryExecution.analyzed.canonicalized,
-        Similarity.sourceVersion(grams), numBits, numHashes)) {
-      val bytes = grams
-        .agg(call_function(graft.functions.GraftFunctions.BloomAggName,
-          col("gh"), lit(numBits), lit(numHashes)).as("f"))
-        .collect()(0).getAs[Array[Byte]]("f") // ONE row, numBits/8 bytes
-      graft.functions.BloomAgg.registerProbe(
-        spark, spark.sparkContext.broadcast(bytes))
-    }
+    val bytes = TextDedup.gramHashes(evalDocs, shingleK)
+      .agg(call_function(graft.functions.GraftFunctions.BloomAggName,
+        col("gh"), lit(numBits), lit(numHashes)).as("f"))
+      .collect()(0).getAs[Array[Byte]]("f") // ONE row, numBits/8 bytes
+    graft.functions.BloomAgg.probe(spark.sparkContext.broadcast(bytes))
   }
 
   /** Unfiltered [[bloomDecontaminate]] — see [[decontaminateAudit]].
@@ -410,7 +333,7 @@ object Decontaminate {
       buildGramBloomProbe(evalDocs, shingleK, numBits, numHashes), shingleK)
 
   /** [[bloomDecontaminateAudit]] against an ALREADY-BUILT probe (a
-    * [[buildGramBloomProbe]] name): the serve-many form — one filter
+    * [[buildGramBloomProbe]] handle): the serve-many form — one filter
     * build amortizes over every corpus increment probed against it,
     * including the streaming ingest gate
     * ([[graft.streaming.StreamOps]]), which calls this per
@@ -420,16 +343,13 @@ object Decontaminate {
     */
   def bloomAuditWithProbe(
       docs: DataFrame,
-      probeName: String,
+      probe: Column => Column,
       shingleK: Int = 3): DataFrame = {
     graft.functions.GraftFunctions.ensureRegistered(docs.sparkSession)
-    // r18: the corpus pass is the zero-shuffle [[probeAudit]] kernel —
-    // the filter is already a fixed-size broadcast at ANY eval
-    // cardinality, so unlike the exact form there is no oversized
-    // regime to fall back to; the former gram-window + distinct +
-    // groupBy + join-back plan paid four exchanges for statistics that
-    // are pure per-row functions of (text, filter).
-    probeAudit(docs, shingleK, gh => call_function(probeName, gh))
+    // the zero-shuffle [[probeAudit]] kernel: the filter is a
+    // fixed-size broadcast at ANY eval cardinality, so unlike the
+    // exact form there is no oversized regime to fall back to
+    probeAudit(docs, shingleK, probe)
   }
 
   /** Calibration audit — the exact join AND the Bloom probe from ONE
@@ -461,22 +381,16 @@ object Decontaminate {
       numBits: Long = 1L << 22,
       numHashes: Int = 5): DataFrame = {
     graft.functions.GraftFunctions.ensureRegistered(docs.sparkSession)
-    val probe = buildGramBloomProbe(evalDocs, shingleK, numBits, numHashes)
-    val bloomHit = (gh: Column) => call_function(probe, gh)
-    // r18: both the exact and the Bloom side of the calibration ride
-    // ONE zero-shuffle projection over the per-row distinct gram array
-    // — the exact side through the memoized count-map membership probe
-    // (values identical to the former eval-distinct broadcast join).
-    // A calibration runs on a SAMPLE by contract, so the eval set is
-    // bounded in every real use; an oversized set (or the forced-
-    // distributed certification) keeps the join form below.
-    val exactProbe =
-      if (graft.Regimes.forceDistributed) ProbeMemo.Negative
-      else buildGramSetProbe(evalDocs, shingleK)
-    val audited =
-      if (exactProbe != ProbeMemo.Negative) {
-        val exHit = (gh: Column) =>
-          call_function(exactProbe, gh) > 0
+    val bloomHit = buildGramBloomProbe(evalDocs, shingleK, numBits, numHashes)
+    // both the exact and the Bloom side of the calibration ride ONE
+    // zero-shuffle projection over the per-row distinct gram array —
+    // the exact side through the count-map membership probe (values
+    // identical to an eval-distinct broadcast join). A calibration runs
+    // on a SAMPLE by contract, so the eval set is bounded in every real
+    // use; an oversized set (or the forced-distributed certification)
+    // keeps the join form below.
+    val audited = buildGramSetProbe(evalDocs, shingleK) match {
+      case Some(exHit) =>
         docs
           .select(col("doc_id"), TextFns.tokenHashes(col("text")).as("hs"))
           .select(col("doc_id"),
@@ -492,7 +406,7 @@ object Decontaminate {
               .otherwise(col("n_hit").cast("double") / col("n_grams"))
               .as("overlap"),
             col("bloom_hit"))
-      } else {
+      case None =>
         val evalDistinct = TextDedup.gramHashes(evalDocs, shingleK)
           .select(col("gh")).distinct()
           .withColumn("ex", lit(1))
@@ -512,9 +426,9 @@ object Decontaminate {
                 col("n_grams"))
               .as("overlap"),
             coalesce(col("bloom_hit"), lit(0L)).as("bloom_hit"))
-      }
-    // lazy (r21): the caller's first action materializes the audit
-    // frame; downstream multi-consumers then read blocks
+    }
+    // lazy: the caller's first action materializes the audit frame;
+    // downstream multi-consumers then read blocks
     audited.localCheckpoint(eager = false)
   }
 

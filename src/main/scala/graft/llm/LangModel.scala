@@ -51,15 +51,14 @@ import org.apache.spark.sql.functions._
   * law, and the train slice is curated/small by construction), built
   * in a single reference scan with map-side partial aggregation over
   * hashed keys. Serving is dual-regime: a bounded model compiles into
-  * an exact broadcast count map ([[graft.functions.LongCountMap]] —
-  * memoized per (plan, source fingerprint), build once / score every
-  * increment) and the corpus pass is JOIN-FREE — three codegen'd O(1)
-  * probes per bigram in a projection, one map-side-combined per-doc
-  * aggregation as the only exchange. An oversized model (or
-  * `forceDistributed`) keeps equi-joins on the long keys, fronted by
-  * a distinct (doc, bigram) pre-aggregation so the model join pays
-  * one row per distinct key. Nothing in the plan is quadratic and
-  * nothing data-sized collects.
+  * an exact broadcast count map ([[graft.functions.LongCountMap]],
+  * built per call from the reference as it is now) and the corpus pass
+  * is JOIN-FREE — three codegen'd O(1) probes per bigram in a
+  * projection, one map-side-combined per-doc aggregation as the only
+  * exchange. An oversized model (or `forceDistributed`) keeps
+  * equi-joins on the long keys, fronted by a distinct (doc, bigram)
+  * pre-aggregation so the model join pays one row per distinct key.
+  * Nothing in the plan is quadratic and nothing data-sized collects.
   */
 object LangModel {
 
@@ -116,10 +115,7 @@ object LangModel {
     // re-inlines the whole tokenize+md5 pipeline below the projection,
     // doubling every scan) — short docs are excluded by in-PROJECTION
     // when-guards, and `explode` of the resulting empty array emits
-    // nothing. Built LAZY here: the probe memo below keys on this
-    // frame's canonicalized plan, and a memo hit skips the build
-    // entirely (the serve-many artifact shape — one model serves every
-    // corpus scored against the same unchanged reference).
+    // nothing.
     val modelFrame = refDocs
       .select(TextFns.tokenHashes(col("text")).as("hs"))
       .select(explode(concat(
@@ -140,61 +136,46 @@ object LangModel {
     // was at the planner's mercy: with AQE off the checkpoint's
     // unknown stats demoted both model joins to sort-merge and the
     // stream paid TWO full shuffles against a few thousand counters.)
-    // The probe is memoized per (plan, source fingerprint) exactly
-    // like the Bloom/IVF artifacts — build once, score many. A model
-    // that overflows the bound — the Wikipedia-scale reference, or
-    // forceDistributed (oracle-certified) — keeps the shuffle-join
-    // form, fronted by a distinct (doc, bigram) pre-aggregation so
-    // the model join pays one row per distinct key. Key spaces inside
-    // the one map: unigram h in [0, 2^31); bigram keys tagged with
-    // bit 62; V under the reserved key -2 (no data key is negative).
-    // V = 0 (empty/token-free reference) raises at BUILD time in this
-    // regime (r16 ADVICE — the predicate would be unsatisfiable and
-    // the gate would silently keep everything) and through the lazy
+    // A model that overflows the bound — the Wikipedia-scale
+    // reference, or forceDistributed (oracle-certified) — keeps the
+    // shuffle-join form, fronted by a distinct (doc, bigram)
+    // pre-aggregation so the model join pays one row per distinct key.
+    // Key spaces inside the one map: unigram h in [0, 2^31); bigram
+    // keys tagged with bit 62; V under the reserved key -2 (no data key
+    // is negative). V = 0 (empty/token-free reference) raises at BUILD
+    // time in this regime — the predicate would be unsatisfiable and
+    // the gate would silently keep everything — and through the lazy
     // vocab raise_error in the join regime.
-    var spilled: Option[DataFrame] = None // oversized build -> join path
-    val memoed: String =
-      if (graft.Regimes.forceDistributed) Decontaminate.ProbeMemo.Negative
-      else Decontaminate.ProbeMemo.getOrBuild(spark, ("lmcountmap",
-          modelFrame.queryExecution.analyzed.canonicalized,
-          Similarity.sourceVersion(modelFrame), broadcastModelMaxRows)) {
-        val ck = modelFrame.localCheckpoint()
-        val bounded = ck.limit(broadcastModelMaxRows + 1).count() <=
-          broadcastModelMaxRows.toLong
-        if (!bounded) {
-          // the OVERSIZED verdict memoizes (r17 ADVICE: the old ""
-          // sentinel never memo-hit, so every call on an unchanged
-          // oversized reference re-ran this limit/count probe and
-          // pinned one more checkpoint) — THIS call hands its
-          // already-materialized checkpoint to the join regime below;
-          // later calls memo-hit the verdict and go straight there,
-          // paying exactly one checkpoint per call like any other
-          // forced-distributed run (released by the harness broom)
-          spilled = Some(ck)
-          Decontaminate.ProbeMemo.Negative
-        } else {
-          val rows = ck.collect()
-          graft.operators.Checkpoints.release(ck)
-          val vocabN = rows.count(_.getInt(0) == 0)
-          require(vocabN > 0,
-            "rareTransitionScore: reference corpus has an empty " +
-              "vocabulary (no tokens) — the rarity gate would pass " +
-              "every document")
-          val pairs = rows.iterator.map { r =>
-            val k = r.getLong(1)
-            (if (r.getInt(0) == 0) k else k | (1L << 62)) -> r.getLong(2)
-          } ++ Iterator(VocabKey -> vocabN.toLong)
-          graft.functions.LongCountMap.registerProbe(spark,
-            spark.sparkContext.broadcast(
-              graft.functions.LongCountMap.build(pairs, rows.length + 1)))
+    //
+    // ONE job fills the model checkpoint and counts it, collecting the
+    // rows when bounded; an oversized model's filled checkpoint is what
+    // the join regime reads, so the model materializes once either way.
+    val model = modelFrame.localCheckpoint(eager = false)
+    val bounded =
+      if (graft.Regimes.forceDistributed) None
+      else {
+        val (n, rows) = graft.operators.Checkpoints
+          .countAndCollect(model, broadcastModelMaxRows)
+        if (n > broadcastModelMaxRows) None
+        else {
+          graft.operators.Checkpoints.release(model)
+          Some(rows)
         }
       }
-    val probeName: String =
-      if (memoed == Decontaminate.ProbeMemo.Negative) "" else memoed
 
-    val perDoc =
-      if (probeName.nonEmpty) {
-        val probe = (k: Column) => call_function(probeName, k)
+    val perDoc = bounded match {
+      case Some(rows) =>
+        val vocabN = rows.count(_.getInt(0) == 0)
+        require(vocabN > 0,
+          "rareTransitionScore: reference corpus has an empty " +
+            "vocabulary (no tokens) — the rarity gate would pass " +
+            "every document")
+        val pairs = rows.iterator.map { r =>
+          val k = r.getLong(1)
+          (if (r.getInt(0) == 0) k else k | (1L << 62)) -> r.getLong(2)
+        } ++ Iterator(VocabKey -> vocabN.toLong)
+        val probe = graft.functions.LongCountMap.probe(spark.sparkContext
+          .broadcast(graft.functions.LongCountMap.build(pairs, rows.length + 1)))
         val rareP = (lit(rarity) * (probe(col("bg")
             .bitwiseOR(lit(1L << 62))) + 1L)) <
           (probe(shiftright(col("bg"), 31)) + probe(lit(VocabKey)))
@@ -202,8 +183,7 @@ object LangModel {
           .select(col("doc_id"), when(rareP, 1L).otherwise(0L).as("__r"))
           .groupBy(col("doc_id"))
           .agg(count(lit(1)).as("n_bigrams"), sum(col("__r")).as("n_rare"))
-      } else {
-        val model = spilled.getOrElse(modelFrame.localCheckpoint())
+      case None =>
         val trainUni = model.filter(col("t") === 0)
           .select(col("k").as("uh"), col("c").as("c_a"))
         val trainBg = model.filter(col("t") === 1)
@@ -228,7 +208,7 @@ object LangModel {
           .groupBy(col("doc_id"))
           .agg(sum(col("n")).as("n_bigrams"),
             sum(when(rare, col("n")).otherwise(0L)).as("n_rare"))
-      }
+    }
 
     docs.select(col("doc_id"))
       .join(perDoc, Seq("doc_id"), "left")

@@ -668,9 +668,8 @@ object Similarity {
           slice(col("fullcv"), s * sw + 1, sw)): _*)))
       .select(col("pos").cast("int").as("sub"), col("code"),
         col("col").as("cv"))
-    // m × nCodes rows — bounded by construction; memoized like every
-    // index-artifact collect (codebooks train once, encode many)
-    val rows = memoCollect(cbPlan)
+    // m × nCodes rows — bounded by construction
+    val rows = cbPlan.collect()
     cbPlan.sparkSession.createDataFrame(
       java.util.Arrays.asList(rows: _*), cbPlan.schema)
   }
@@ -846,107 +845,23 @@ object Similarity {
     // assignment/probe plans inline the centroids as a literal array —
     // no localCheckpoint write, no broadcast-build job per consumer.
     // This is the IntervalJoin-median convention: a bounded, structural
-    // collect, not a data-sized one. memoCollect (r15): a rebuild
-    // against UNCHANGED sources reuses the landed rows — indexes are
-    // built once and served many times, and the fingerprint re-runs
-    // the job the moment the source file set changes.
+    // collect, not a data-sized one. A caller that serves many probes
+    // from one index keeps the returned pair (or persists it with
+    // writeIvfIndex) instead of training again.
     val centPlan = e.groupBy(col("label"))
       .agg(array((1 to dims).map(i =>
         round(avg(element_at(col("embedding"), i).cast("double")), 3)): _*)
         .as("cv"))
       .select(col("label").as("ccell"), col("cv")) // avoid `label` clash
-    val centRows = memoCollect(centPlan)
+    val centRows = centPlan.collect()
     val cent = centPlan.sparkSession.createDataFrame(
       java.util.Arrays.asList(centRows: _*), centPlan.schema)
 
     (cent, assignCells(e, centArrayLiteral(centRows)))
   }
 
-  /** Driver-side memo of collected centroid rows, keyed by the
-    * CANONICALIZED logical plan of `cent.select(ccell, cv)` plus the
-    * max mtime of its file-backed sources ([[sourceVersion]]): two
-    * probes against the same unchanged index hit the same entry, so
-    * only the first pays the (tiny, one-row-per-cell) collect job,
-    * while an index overwritten in place changes the mtime component
-    * and re-collects (r12 — closes the stale-read trade-off the first
-    * cut documented). Bounded LRU — centroid tables are report-sized
-    * by construction, and 8 live indexes per driver is generous.
-    */
-  private val centCollectCache =
-    new java.util.LinkedHashMap[
-        (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Long),
-        Array[org.apache.spark.sql.Row]](16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[
-            (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Long),
-            Array[org.apache.spark.sql.Row]]): Boolean = size > 8
-    }
-
-  /** Fingerprint of the file-backed leaves of `plan` (0 for purely
-    * local/in-memory plans): folded into the memo key so an index
-    * overwritten IN PLACE at the same path misses the cache on the
-    * next probe instead of serving stale centroids (r12 ADVICE).
-    * Resolved through the HADOOP FileSystem of each root path — NOT
-    * `java.io.File`, which silently reports lastModified=0 for any
-    * non-local URI (hdfs://, s3a://), i.e. a constant key exactly in
-    * the distributed-storage regime this memo targets (r13, closes
-    * the r12 ADVICE medium). The fingerprint folds every child's
-    * (name, mtime, length) so coarse-mtime filesystems (1–2 s
-    * granularity on object stores) still change the key when a
-    * same-second rewrite alters the file set or sizes. One driver-side
-    * FS listing per root path — centroid tables are one tiny file set
-    * by construction.
-    */
-  private[graft] def sourceVersion(plan: DataFrame): Long =
-    plan.queryExecution.analyzed.collectLeaves().flatMap {
-      case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        r.relation match {
-          case h: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-            val conf = plan.sparkSession.sessionState.newHadoopConf()
-            h.location.rootPaths.flatMap { p =>
-              scala.util.Try {
-                val fs = p.getFileSystem(conf)
-                val root = fs.getFileStatus(p)
-                val statuses =
-                  if (root.isDirectory) root +: fs.listStatus(p).toSeq
-                  else Seq(root)
-                statuses.foldLeft(1125899906842597L) { (acc, s) =>
-                  31L * (31L * (31L * acc + s.getPath.getName.hashCode)
-                    + s.getModificationTime) + s.getLen
-                }
-              }.toOption
-            }
-          case _ => Nil
-        }
-      case _ => Nil
-    }.foldLeft(0L)((acc, v) => 31L * acc + v)
-
   private def collectCentroids(cent: DataFrame): Array[org.apache.spark.sql.Row] =
-    memoCollect(cent.select(col("ccell"), col("cv")))
-
-  /** The memo lookup itself, shared by every bounded-by-construction
-    * index-artifact collect (probe centroid reads, [[ivfTrain]] /
-    * [[kmeansStep]] centroid estimation, [[pqTrain]] codebooks): an
-    * index is built once and served many times, so the repeated-call
-    * cost that matters is the steady state — a re-probe or re-compose
-    * against UNCHANGED sources must not re-run the corpus-wide
-    * estimation job. Keyed by canonicalized analyzed plan + the
-    * file-source fingerprint (same staleness guard as before: an index
-    * overwritten in place changes the fingerprint and re-collects;
-    * purely local plans carry their data inside the canonical form).
-    */
-  private def memoCollect(plan: DataFrame): Array[org.apache.spark.sql.Row] = {
-    val key = (plan.queryExecution.analyzed.canonicalized, sourceVersion(plan))
-    centCollectCache.synchronized {
-      Option(centCollectCache.get(key))
-    } match {
-      case Some(rows) => rows
-      case None =>
-        val rows = plan.collect() // outside the lock: collect runs a job
-        centCollectCache.synchronized { centCollectCache.put(key, rows) }
-        rows
-    }
-  }
+    cent.select(col("ccell"), col("cv")).collect()
 
   /** Collected centroid rows `(ccell, cv)` as ONE literal
     * `array<struct<ccell, cv>>` column, sorted by cell id — the same
@@ -998,15 +913,14 @@ object Similarity {
     graft.functions.GraftFunctions.ensureRegistered(cells.sparkSession)
     import org.apache.spark.sql.expressions.Window
     // Centroids land driver-side and rank as a literal-array expression
-    // per query row (r11): `sort_array` over `(d2, ccell)` structs is
+    // per query row: `sort_array` over `(d2, ccell)` structs is
     // the old window's `ORDER BY d2, ccell` tie-break, and the explode
     // of its first nProbe entries replaces crossJoin+row_number — the
     // probe side becomes one codegen'd projection with no broadcast of
     // cent and no window exchange. cent is one row per cell by
     // construction: from [[ivfTrain]] it is already a LocalRelation
-    // (collect is free); from [[readIvfIndex]] it is one tiny scan,
-    // memoized below so repeated probes against the same index plan
-    // don't re-run it (r11 ADVICE).
+    // (collect is free); from [[readIvfIndex]] it is one tiny scan per
+    // probe call, which always reads the index as it is on disk now.
     val cents = centArrayLiteral(collectCentroids(cent))
     val probes = queries
       .select(col("query_id"), col("qv"), l2norm(col("qv")).as("qn"),
@@ -1087,13 +1001,13 @@ object Similarity {
     // re-estimated centroids: tiny (one row per cell) but derived by a
     // corpus-wide pass — run it once and land the rows driver-side so
     // the assignment literal AND the mass report read one computed copy
-    // (the same r11 convention as ivfTrain; replaces a localCheckpoint)
+    // (the same convention as ivfTrain)
     val cent2Plan = cells1.groupBy(col("cell"))
       .agg(array((1 to dims).map(i =>
         round(avg(element_at(col("embedding"), i).cast("double")), 3)): _*)
         .as("cv"))
       .select(col("cell").as("ccell"), col("cv"))
-    val cent2Rows = memoCollect(cent2Plan)
+    val cent2Rows = cent2Plan.collect()
     val cent2 = cent2Plan.sparkSession.createDataFrame(
       java.util.Arrays.asList(cent2Rows: _*), cent2Plan.schema)
     // re-assignment rides the same no-explosion array_min as

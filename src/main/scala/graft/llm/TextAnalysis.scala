@@ -886,35 +886,26 @@ object TextAnalysis {
 
   /** Build a Count-Min grid over a REFERENCE corpus's k-gram stream
     * (every occurrence, duplicates included — frequencies are the
-    * point) and register a probe bound to its broadcast handle;
-    * returns the probe's function name. Deliberately eager, exactly
-    * like [[Decontaminate.buildGramBloomProbe]]: the grid is the
-    * build-once/serve-many artifact, and lazy deliveries collapse at
-    * real grid sizes (plan-literal deep-hashing; per-row
-    * `getBinary` copies).
+    * point) and return its point-query probe
+    * ([[graft.functions.CountMinAgg.probe]]) over the grid's broadcast
+    * handle. Deliberately eager, exactly like
+    * [[Decontaminate.buildGramBloomProbe]]: the grid is the
+    * build-once/serve-many artifact the caller holds, and lazy
+    * deliveries collapse at real grid sizes (plan-literal
+    * deep-hashing; per-row `getBinary` copies).
     */
   def buildGramCmsProbe(
       refDocs: DataFrame,
       shingleK: Int = 3,
       width: Int = 8192,
-      depth: Int = 4): String = {
+      depth: Int = 4): Column => Column = {
     val spark = refDocs.sparkSession
     graft.functions.GraftFunctions.ensureRegistered(spark)
-    import graft.functions.GraftFunctions.CmsAggName
-    // memoized per (plan, file fingerprint, geometry): a registration
-    // pins its broadcast for the session, so repeated builds against
-    // unchanged sources must reuse one grid (Decontaminate.ProbeMemo)
-    val grams = TextDedup.gramHashes(refDocs, shingleK)
-    Decontaminate.ProbeMemo.getOrBuild(spark, ("cms",
-        grams.queryExecution.analyzed.canonicalized,
-        Similarity.sourceVersion(grams), width, depth)) {
-      val bytes = grams
-        .agg(call_function(CmsAggName,
-          cmsGramKey(col("gh")), lit(width), lit(depth)).as("g"))
-        .collect()(0).getAs[Array[Byte]]("g") // ONE row, depth·width longs
-      graft.functions.CountMinAgg.registerProbe(
-        spark, spark.sparkContext.broadcast(bytes))
-    }
+    val bytes = TextDedup.gramHashes(refDocs, shingleK)
+      .agg(call_function(graft.functions.GraftFunctions.CmsAggName,
+        cmsGramKey(col("gh")), lit(width), lit(depth)).as("g"))
+      .collect()(0).getAs[Array[Byte]]("g") // ONE row, depth·width longs
+    graft.functions.CountMinAgg.probe(spark.sparkContext.broadcast(bytes))
   }
 
   /** The CMS key for a polynomial gram hash: gram hashes are 31-bit
@@ -946,9 +937,9 @@ object TextAnalysis {
     */
   def cmsFamiliarity(
       docs: DataFrame,
-      probeName: String,
+      probe: Column => Column,
       shingleK: Int = 3): DataFrame = {
-    val est = call_function(probeName, cmsGramKey(col("gh")))
+    val est = probe(cmsGramKey(col("gh")))
     val perDoc = TextDedup.gramHashes(docs, shingleK).distinct()
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_grams"),

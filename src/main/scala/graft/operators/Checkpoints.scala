@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.LogicalRDD
 
 /** Lifecycle control for `localCheckpoint` blocks.
@@ -24,46 +25,49 @@ import org.apache.spark.sql.execution.LogicalRDD
   */
 object Checkpoints {
 
-  /** ONE-job fused materialize-and-probe (r22; guide §1.5/§2.4 driver
-    * round trips — the r21 form still ran a `count()` job and then a
-    * separate `collect()` job on every bounded verdict): fully drains
-    * every partition of `df`'s physical RDD — completing lazy
-    * `localCheckpoint` blocks exactly like `count()` does — while ALSO
-    * shipping up to `cap + 1` rows per partition back with the counts,
-    * so a bounded frame needs no second job to collect.
+  /** Fused materialize-and-probe: fully drains every partition of
+    * `df`'s physical RDD — completing lazy `localCheckpoint` blocks
+    * exactly like `count()` does — while also shipping each partition's
+    * first `cap / numPartitions + 1` rows back with its count, so a
+    * bounded, evenly spread frame needs no second job to collect.
     *
-    * Returns `(n, rows)`: `rows` holds EVERY row of the frame
-    * (external `Row`s in `df.schema`) iff `n <= cap`; for an oversized
-    * frame each partition stops copying at `cap + 1` rows (the drain
-    * still completes, so checkpoint blocks are whole) and `rows` is
-    * empty — only `n` is meaningful. Driver transfer is bounded by
-    * `numPartitions × (cap + 1)` rows; callers size `cap` like they
-    * sized the old `collect()` bound.
+    * Returns `(n, rows)`: `rows` holds every row of the frame (external
+    * `Row`s in `df.schema`) iff `n <= cap`; for an oversized frame
+    * `rows` is empty and only `n` is meaningful. When `n <= cap` but
+    * some partitions held more than their share, a second job fetches
+    * just those partitions. Driver transfer is therefore bounded by
+    * about `cap + numPartitions` rows in either case, whatever the
+    * partition count — an oversized frame ships counts and short
+    * prefixes, never its bulk.
     */
   def countAndCollect(df: DataFrame, cap: Long)
       : (Long, Array[org.apache.spark.sql.Row]) = {
     val schema = df.schema
-    val parts = df.queryExecution.toRdd
-      .mapPartitions { it =>
-        val buf = scala.collection.mutable.ArrayBuffer
-          .empty[org.apache.spark.sql.catalyst.InternalRow]
-        var n = 0L
-        while (it.hasNext) {
-          val r = it.next() // rows are buffer-backed and reused: copy
-          if (n <= cap) buf += r.copy()
-          n += 1L
-        }
-        Iterator.single((n, buf.toArray))
+    val rdd = df.queryExecution.toRdd
+    val sc = df.sparkSession.sparkContext
+    val share = cap / math.max(1, rdd.getNumPartitions) + 1
+    val parts = sc.runJob(rdd, (it: Iterator[InternalRow]) => {
+      val buf = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
+      var n = 0L
+      while (it.hasNext) {
+        val r = it.next() // rows are buffer-backed and reused: copy
+        if (n < share) buf += r.copy()
+        n += 1L
       }
-      .collect()
+      (n, buf.toArray)
+    })
     val n = parts.iterator.map(_._1).sum
-    if (n > cap) (n, Array.empty)
-    else {
-      val conv = org.apache.spark.sql.catalyst.CatalystTypeConverters
-        .createToScalaConverter(schema)
-      (n, parts.iterator.flatMap(_._2)
-        .map(r => conv(r).asInstanceOf[org.apache.spark.sql.Row]).toArray)
-    }
+    if (n > cap) return (n, Array.empty)
+    val over = parts.indices.filter(i => parts(i)._1 > parts(i)._2.length)
+    val refetched =
+      if (over.isEmpty) Map.empty[Int, Array[InternalRow]]
+      else over.zip(sc.runJob(rdd,
+        (it: Iterator[InternalRow]) => it.map(_.copy()).toArray, over)).toMap
+    val conv = org.apache.spark.sql.catalyst.CatalystTypeConverters
+      .createToScalaConverter(schema)
+    (n, parts.indices.iterator
+      .flatMap(i => refetched.getOrElse(i, parts(i)._2))
+      .map(r => conv(r).asInstanceOf[org.apache.spark.sql.Row]).toArray)
   }
 
   /** Unpersist the pinned blocks behind a `localCheckpoint`ed frame.

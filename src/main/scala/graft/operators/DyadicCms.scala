@@ -94,13 +94,11 @@ object DyadicCms {
   }
 
   /** Build the dyadic grid over `df(valueCol)` — one row of
-    * `depth×width` longs — and register a broadcast-handle probe for
-    * it; returns the probe's function name for
-    * `call_function(name, nodeKeyCol)`. Eager and memoized per
-    * (plan, source fingerprint, geometry), exactly like the
-    * gram-probe builders ([[graft.llm.Decontaminate.ProbeMemo]] —
-    * one grid per unchanged source per session, broadcast bytes ship
-    * once per executor). NULL and negative values are excluded
+    * `depth×width` longs — and return its broadcast-handle point query
+    * ([[CountMinAgg.probe]]) over node keys. Eager, exactly like the
+    * gram-probe builders: the caller holds the returned probe and
+    * serves every rank query from it, and the broadcast bytes ship
+    * once per executor. NULL and negative values are excluded
     * (rank is over the non-negative domain the dyadic tree covers);
     * values at or above `2^levels` error loudly rather than
     * silently folding into wrong nodes.
@@ -110,7 +108,7 @@ object DyadicCms {
       valueCol: String,
       levels: Int,
       width: Int = 8192,
-      depth: Int = 4): String = {
+      depth: Int = 4): Column => Column = {
     require(levels > 0 && levels <= MaxLevels,
       s"levels must be in (0, $MaxLevels]")
     val spark = df.sparkSession
@@ -122,27 +120,21 @@ object DyadicCms {
         .otherwise(raise_error(concat(
           lit(s"dyadic value out of range [0, 2^$levels): "),
           col("v").cast("string")))).as("v"))
-    val keys = vals.select(explode(insertKeys(col("v"), levels)).as("k"))
-    graft.llm.Decontaminate.ProbeMemo.getOrBuild(spark, ("dyadic",
-        keys.queryExecution.analyzed.canonicalized,
-        graft.llm.Similarity.sourceVersion(keys), levels, width, depth)) {
-      val bytes = keys
-        .agg(call_function(GraftFunctions.CmsAggName,
-          col("k"), lit(width), lit(depth)).as("g"))
-        .collect()(0).getAs[Array[Byte]]("g") // ONE row, depth·width longs
-      CountMinAgg.registerProbe(spark, spark.sparkContext.broadcast(bytes))
-    }
+    val bytes = vals.select(explode(insertKeys(col("v"), levels)).as("k"))
+      .agg(call_function(GraftFunctions.CmsAggName,
+        col("k"), lit(width), lit(depth)).as("g"))
+      .collect()(0).getAs[Array[Byte]]("g") // ONE row, depth·width longs
+    CountMinAgg.probe(spark.sparkContext.broadcast(bytes))
   }
 
   /** Estimated `rank(p) = |{v < p}|` as a column over probe points
     * `p`: the fixed `levels`-term dyadic sum against a
     * [[buildRankProbe]] grid. Never undercounts the true rank.
     */
-  def estRank(probeName: String, p: Column, levels: Int): Column =
+  def estRank(probe: Column => Column, p: Column, levels: Int): Column =
     (0 until levels).map { l =>
       when(shiftright(p, l).bitwiseAND(lit(1L)) === 1L,
-        call_function(probeName,
-          nodeKey(l, shiftright(p, l + 1) * 2L)))
+        probe(nodeKey(l, shiftright(p, l + 1) * 2L)))
         .otherwise(lit(0L))
     }.reduce(_ + _)
 

@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -394,16 +394,17 @@ object StreamOps {
     }
   }
 
-  /** ST12 (r15) — streaming contamination gate: a document INGEST
-    * stream filtered per micro-batch against the Bloom filter built
+  /** ST12 — streaming contamination gate: a document INGEST stream
+    * filtered per micro-batch against the Bloom filter built
     * batch-side from the eval/blocklist set
     * ([[graft.llm.Decontaminate.buildGramBloomProbe]] — build once,
-    * serve every increment). The filter rides the probe's broadcast
-    * handle, so each executor holds the bytes ONCE for the query's
-    * lifetime and per-row cost is the k bit tests; there is zero
-    * stream state — the "known contaminated" knowledge lives in the
-    * broadcast, not the state store, which is what lets the gate run
-    * at any ingest rate with flat memory. Per-doc overlap stats are
+    * serve every increment). The gate holds the probe handle and the
+    * filter rides its broadcast, so each executor holds the bytes ONCE
+    * for the query's lifetime and per-row cost is the k bit tests;
+    * there is zero stream state — the "known contaminated" knowledge
+    * lives in the broadcast, not the state store, which is what lets
+    * the gate run at any ingest rate with flat memory. Per-doc overlap
+    * stats are
     * batch-local (a doc's grams arrive with it), so the gate's output
     * is byte-identical to the batch
     * [[graft.llm.Decontaminate.bloomDecontaminate]] on the same rows
@@ -414,7 +415,7 @@ object StreamOps {
     */
   def streamingContaminationGate(
       docs: DataFrame,
-      probeName: String,
+      probe: Column => Column,
       shingleK: Int = 3,
       maxOverlap: Double = 0.0)(sink: (DataFrame, Long) => Unit)
       : org.apache.spark.sql.streaming.StreamingQuery =
@@ -422,7 +423,7 @@ object StreamOps {
       .outputMode(OutputMode.Append())
       .foreachBatch { (batch: DataFrame, id: Long) =>
         sink(graft.llm.Decontaminate
-          .bloomAuditKeptWithProbe(batch, probeName, shingleK, maxOverlap),
+          .bloomAuditKeptWithProbe(batch, probe, shingleK, maxOverlap),
           id)
       }
       .start()

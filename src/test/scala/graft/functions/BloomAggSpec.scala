@@ -103,27 +103,6 @@ class BloomAggSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
-  test("probe memo re-validates against the live registry, not just the key") {
-    val s = spark
-    import s.implicits._
-    val eval = Seq((100L, "beta gamma delta epsilon")).toDF("doc_id", "text")
-    val name1 = graft.llm.Decontaminate
-      .buildGramBloomProbe(eval, shingleK = 3, numBits = 1 << 12)
-    val name2 = graft.llm.Decontaminate
-      .buildGramBloomProbe(eval, shingleK = 3, numBits = 1 << 12)
-    assert(name1 === name2, "unchanged sources must reuse one probe")
-    // simulate the stale-session regime (r15 ADVICE): the memo key
-    // still matches but the registry no longer holds the function —
-    // a hit must rebuild instead of returning the dangling name
-    spark.sessionState.functionRegistry.dropFunction(
-      org.apache.spark.sql.catalyst.FunctionIdentifier(name1))
-    val name3 = graft.llm.Decontaminate
-      .buildGramBloomProbe(eval, shingleK = 3, numBits = 1 << 12)
-    assert(spark.sessionState.functionRegistry.functionExists(
-      org.apache.spark.sql.catalyst.FunctionIdentifier(name3)),
-      "rebuilt probe must resolve in the live registry")
-  }
-
   test("bloomDecontaminate never keeps a doc the exact form drops") {
     val s = spark
     import s.implicits._

@@ -108,13 +108,9 @@ class CountMinAggSpec extends AnyFunSuite with SparkSpec {
     import s.implicits._
     val keys = (0L until 3000L).map(i => key60(i % 250))
     val bytes = grid(keys, w = 512, d = 4, partitions = 6)
-    val probe = CountMinAgg.registerProbe(
-      spark, spark.sparkContext.broadcast(bytes))
-    // registration is idempotent per broadcast
-    val bc2 = spark.sparkContext.broadcast(bytes)
-    assert(CountMinAgg.registerProbe(spark, bc2) === s"graft_cms_probe_b${bc2.id}")
+    val probe = CountMinAgg.probe(spark.sparkContext.broadcast(bytes))
     val probed = keys.distinct.map(Tuple1(_)).toDF("k")
-      .select(col("k"), expr(s"$probe(k)").as("est"))
+      .select(col("k"), probe(col("k")).as("est"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     keys.distinct.foreach { k =>
       assert(probed(k) === CountMinAgg.estimateBytes(bytes, k), s"key $k")

@@ -52,10 +52,10 @@ class LongCountMapSpec extends AnyFunSuite with SparkSpec {
     import s.implicits._
     val pairs = Seq(5L -> 50L, -7L -> 3L, ((1L << 62) | 123L) -> 9L)
     val table = LongCountMap.build(pairs.iterator, pairs.length)
-    val name = LongCountMap.registerProbe(s, s.sparkContext.broadcast(table))
+    val probe = LongCountMap.probe(s.sparkContext.broadcast(table))
     val rows = Seq(Some(5L), Some(-7L), Some((1L << 62) | 123L),
       Some(999L), None).toDF("k")
-      .select(col("k"), call_function(name, col("k")).as("c"))
+      .select(col("k"), probe(col("k")).as("c"))
       .collect()
     val got = rows.map(r =>
       (if (r.isNullAt(0)) None else Some(r.getLong(0))) ->

@@ -224,6 +224,19 @@ class CurationOpsSpec extends AnyFunSuite with SparkSpec {
     assert(lax.getAs[Boolean]("release_ok"))
   }
 
+  test("releaseGate: maxOverlap outside [0, 1) is rejected in both regimes") {
+    val s = spark
+    import s.implicits._
+    val corpus = Seq((1L, "alpha beta gamma delta")).toDF("doc_id", "text")
+    val eval = Seq((100L, "alpha beta gamma")).toDF("doc_id", "text")
+    def rejected(): Unit = for (bad <- Seq(-0.1, 1.0))
+      intercept[IllegalArgumentException](
+        graft.llm.Curation.releaseGate(corpus, eval, maxOverlap = bad))
+    rejected()
+    sys.props("spark.graft.forceDistributed") = "true"
+    try rejected() finally sys.props.remove("spark.graft.forceDistributed")
+  }
+
   test("releaseGate: null-text docs count as dup copies (NULL-excluding distinct)") {
     val s = spark
     import s.implicits._

@@ -103,12 +103,11 @@ class LangModelSpec extends AnyFunSuite with SparkSpec {
   test("oversized-model regime: the shuffle-join path matches the " +
       "count-map probe path row for row (r17)") {
     // broadcastModelMaxRows = 1 forces every model over the bound —
-    // exercising the memo's oversized branch (the Negative verdict
-    // that memoizes by design since r18, plus the spilled-checkpoint
-    // handoff on the first call) against the default probe regime on
-    // identical inputs; run the oversized form twice so BOTH the
-    // probe-and-spill first call and the memo-hit second call are
-    // certified to match the probe regime
+    // exercising the oversized branch (the filled model checkpoint
+    // handed from the bound probe to the join regime) against the
+    // default probe regime on identical inputs; run the oversized form
+    // twice so a repeat call, which probes the reference again and
+    // fills a fresh checkpoint, is certified to match as well
     val corpus = docs((0L until 40L).map(i =>
       i -> (if (i % 7 == 3) s"qq$i zz$i qq$i" else "the cat sat on the mat")): _*)
     val train = corpus.filter(org.apache.spark.sql.functions.col("doc_id") % 2 === 0)
@@ -119,7 +118,7 @@ class LangModelSpec extends AnyFunSuite with SparkSpec {
         r.getDouble(3), r.getBoolean(4))).toSet
     val probe = rows(2000000)
     assert(rows(1) === probe)
-    assert(rows(1) === probe) // memo-hit pass: same rows, no re-probe
+    assert(rows(1) === probe) // repeat call: same rows
   }
 
   test("an empty reference vocabulary raises instead of silently " +

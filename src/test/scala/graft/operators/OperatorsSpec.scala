@@ -27,6 +27,75 @@ class OperatorsSpec extends AnyFunSuite with SparkSpec {
     Checkpoints.release(child)
   }
 
+  test("countAndCollect ships about cap rows at any partition count and " +
+      "refetches only the partitions over their share") {
+    val s = spark
+    import s.implicits._
+    import org.apache.spark.scheduler._
+    val sc = s.sparkContext
+    val group = s"countAndCollect-${System.nanoTime()}"
+    val sentinel = group + "-sentinel"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val shipped = new java.util.concurrent.atomic.AtomicLong(0)
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val sentinelJobs = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val sentinelDone = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        Option(j.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) =>
+            jobs.incrementAndGet(); j.stageIds.foreach(stages.add)
+          case Some(`sentinel`) => sentinelJobs.add(j.jobId)
+          case _ =>
+        }
+      override def onJobEnd(j: SparkListenerJobEnd): Unit =
+        if (sentinelJobs.contains(j.jobId)) sentinelDone.add(j.jobId)
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
+        if (stages.contains(t.stageId) && t.taskMetrics != null)
+          shipped.addAndGet(t.taskMetrics.resultSize)
+    }
+    // (result, jobs run, task-result bytes shipped to the driver). The
+    // listener bus is async but ordered: once a later sentinel job's
+    // end is seen, every event of the measured jobs has been seen too.
+    def measured[A](body: => A): (A, Int, Long) = {
+      jobs.set(0); shipped.set(0); stages.clear()
+      sc.setJobGroup(group, "measured")
+      val out = try body finally sc.clearJobGroup()
+      sc.setJobGroup(sentinel, "sentinel")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (sentinelDone.isEmpty && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(!sentinelDone.isEmpty, "listener bus did not drain")
+      sentinelJobs.clear(); sentinelDone.clear()
+      (out, jobs.get, shipped.get)
+    }
+    val cap = 10000L
+    sc.addSparkListener(listener)
+    try {
+      // bounded and evenly spread: one job ships every row
+      val ((n0, rows0), jobs0, bytes0) = measured(
+        Checkpoints.countAndCollect(s.range(0, cap, 1, 8).toDF("id"), cap))
+      assert(n0 === cap && jobs0 === 1)
+      assert(rows0.map(_.getLong(0)).sorted.toSeq === (0L until cap))
+      // oversized over many partitions: counts plus short prefixes, not
+      // a cap-sized prefix from each of the 8 partitions
+      val ((n1, rows1), jobs1, bytes1) = measured(
+        Checkpoints.countAndCollect(s.range(0, 40 * cap, 1, 8).toDF("id"), cap))
+      assert(n1 === 40 * cap && rows1.isEmpty && jobs1 === 1)
+      assert(bytes1 < 2 * bytes0,
+        s"oversized frame shipped $bytes1 B against $bytes0 B for cap rows")
+      // bounded but skewed: the one partition over its share is fetched
+      // by a second job, and the frame still comes back whole
+      val skewed = sc.parallelize(0 until 8, 8)
+        .flatMap(p => if (p == 0) 0L until cap / 2 else Nil).toDF("id")
+      val ((n2, rows2), jobs2, _) =
+        measured(Checkpoints.countAndCollect(skewed, cap))
+      assert(n2 === cap / 2 && jobs2 === 2)
+      assert(rows2.map(_.getLong(0)).sorted.toSeq === (0L until cap / 2))
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("asof join: latest right row at-or-before, inclusive, null when none") {
     val s = spark
     import s.implicits._
