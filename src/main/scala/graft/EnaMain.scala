@@ -38,9 +38,10 @@ import graft.embl.{EnaPipeline, SegMetrics}
   * Reads gzipped EMBL flat files under the given roots (recursive,
   * `*.dat.gz`, sequence-tree division prune applied), resolves protein
   * ids against the idmapping relation, writes the 7-column headerless
-  * TSV, and logs the segmentation counters (A5). The id-resolution
-  * regime is not a setting: [[chooseBroadcastRegime]] picks broadcast
-  * for mappings within 1 M rows and 256 MB, shuffle otherwise.
+  * TSV, and logs the segmentation counters (A5). Id resolution is one
+  * join plan; [[chooseBroadcastRegime]] only decides whether to hint a
+  * broadcast of the idmapping (within 1 M rows and 256 MB), because a
+  * JDBC source reports no size that Catalyst could decide on.
   */
 object EnaMain {
 
@@ -93,31 +94,28 @@ object EnaMain {
       spark.read.parquet(source).select(col("foreign_id"), col("uniprot_id"))
     }
 
-  /** Bounded broadcast-regime probe: decide broadcast vs shuffle by
-    * reading AT MOST `maxRows`+1 rows. The former `idmapping.count()`
-    * made a V1 JDBC relation scan the whole side table — at true
-    * UniProt scale (~1e9 rows) a full read just to pick the join
-    * strategy. `limit(n).count()` plans a per-partition LocalLimit, so
-    * each cursor stops after n rows (with fetchsize batching, only ~n
-    * rows ever cross the wire).
+  /** Bounded broadcast probe: decide whether to hint a broadcast of the
+    * idmapping into J1 by reading AT MOST `maxRows`+1 rows. Catalyst
+    * makes the same call from the relation's size statistics, but a V1
+    * JDBC relation (the reference's MySQL source) reports none, so
+    * without this probe a small JDBC mapping never broadcasts. A full
+    * `count()` would scan the whole side table, ~1e9 rows at UniProt
+    * scale; `limit(n).count()` plans a per-partition LocalLimit, so each
+    * cursor stops after n rows (with fetchsize batching, only ~n rows
+    * cross the wire).
     *
-    * BYTE cap as well as row cap: a row cap alone lets 10⁶ rows of
-    * pathologically wide ids bloat the driver-built map, so the same
-    * bounded probe also sums payload bytes (`octet_length` of both id
-    * strings) and charges a per-entry JVM overhead (string headers,
-    * map-entry boxing). Either cap exceeded → shuffle regime.
+    * BYTE cap as well as row cap: a row cap alone would broadcast 10⁶
+    * rows of pathologically wide ids, so the same probe sums the
+    * payload bytes (`octet_length` of both id strings) and charges a
+    * per-row JVM overhead. Either cap exceeded → no hint.
     */
   def chooseBroadcastRegime(
       idmapping: DataFrame,
       maxRows: Long,
       maxBytes: Long = 256L << 20): Boolean =
-    if (graft.Regimes.forceDistributed) {
-      // oracle runs certifying the 100 TB plan: always shuffle-resolve
-      false
-    } else if (maxRows >= Int.MaxValue) {
-      // limit() can't probe past Int.MaxValue, and a threshold that
-      // size means billions of driver-collected rows anyway — take the
-      // regime that is safe regardless of the true count
+    if (maxRows >= Int.MaxValue) {
+      // limit() can't probe past Int.MaxValue, and a table that size is
+      // no broadcast candidate anyway
       false
     } else {
       import org.apache.spark.sql.functions.{coalesce, count, lit, octet_length, sum}
@@ -129,7 +127,7 @@ object EnaMain {
               octet_length(col("uniprot_id")).cast("long")), lit(0L)).as("payload"))
         .head()
       val n = row.getLong(0)
-      // ~2x for UTF-16 in-heap strings + ~48B/entry of headers and refs
+      // conservative in-memory size: ~2x the payload + ~48 B per row
       val estBytes = row.getLong(1) * 2 + n * 48
       n <= maxRows && estBytes <= maxBytes
     }
@@ -178,7 +176,7 @@ object EnaMain {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
-      // Java serialization of the broadcast id-map measured 7x slower
+      // Kryo for broadcast blocks and task results
       .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -190,9 +188,7 @@ object EnaMain {
     if (idmappingSource.startsWith("jdbc:")) idmapping.limit(1).count()
 
     val metrics = Some(SegMetrics(spark.sparkContext))
-    // regime selection: a driver-collected broadcast map only pays off
-    // while it is small (the collect + map build is driver-serial);
-    // past the caps the declarative shuffle join wins
+    // the broadcast hint Catalyst cannot derive for a JDBC source
     val broadcastIdMap =
       chooseBroadcastRegime(idmapping, maxRows = 1000000L, maxBytes = 256L << 20)
     val t0 = System.nanoTime()

@@ -26,7 +26,7 @@ object Plans {
     "q10_topk" ->
       "top-k compiles to TakeOrderedAndProject, not a global sort",
     "q29_ena_flagship" ->
-      "whole parse+resolve pipeline: one pass, map-side broadcast resolve, no shuffle before the explode",
+      "whole parse+resolve pipeline: the exploded (locus key, pid) projection joins the raw idmapping before any aggregate (join first, group only the matches); no UDF",
     "q30_minhash_lsh_pairs" ->
       "candidate generation is an equi-join on (band, bucket) — no CartesianProduct; signature agg is partial (map-side)",
     "q33_simhash_pairs" ->

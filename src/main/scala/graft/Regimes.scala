@@ -1,12 +1,9 @@
 package graft
 
 /** Central switch pinning every DUAL-REGIME operator to its
-  * large-scale (distributed) form, so the full DuckDB oracle gate can
-  * hash-certify the 100 TB plans and not just the small-input fast
-  * paths (r12 VERDICT next-round #1: since the r12 probes, the green
-  * rows for q61/q72/q80/q107 exercised the driver union-find and the
-  * InSet barrier at oracle scale — equivalence specs covered the gap,
-  * but the oracle is the hard signal).
+  * large-scale (distributed) form, so the full DuckDB oracle gate
+  * hash-certifies the 100 TB plans and not just the small-input fast
+  * paths.
   *
   * Activated by `SPARK_GRAFT_FORCE_DISTRIBUTED=1` (env, what the
   * driver/gate sets) or `-Dspark.graft.forceDistributed=true` (system
@@ -21,9 +18,9 @@ package graft
   *    checkpoint broadcast join (same keep semantics);
   *  - [[graft.operators.Percentiles]]: single-window vs two-phase
   *    rank (bit-identical integer arithmetic), literal when-chain vs
-  *    broadcast-lookup bounds (same values);
-  *  - [[graft.EnaMain.chooseBroadcastRegime]]: driver-map resolve vs
-  *    shuffle join (same J1 semantics).
+  *    broadcast-lookup bounds (same values).
+  * ENA id resolution is not a pair: `EnaPipeline.resolveIds` is one
+  * join plan, and its broadcast flag is only a join-strategy hint.
   * `TextAnalysis.familiarityBucketsAuto` is deliberately NOT pinned:
   * its large form is APPROXIMATE — forcing it would change values,
   * which is exactly what an oracle run must not do; its scale form is

@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 import graft.sources.EmblDataSource
 
 /** The end-to-end ENA pipeline as ONE lazy Spark plan (SURVEY.md §3):
-  * pruned EMBL scan with in-reader segmentation -> broadcast idmapping
-  * join -> fallback coalesce -> explode -> 7-column relation -> TSV
+  * pruned EMBL scan with in-reader segmentation -> idmapping join ->
+  * fallback coalesce -> explode -> 7-column relation -> TSV
   * sink partitioned by source-tree division.
   *
   * Replaces the reference's dynamic Dask graph + per-record MySQL
@@ -21,10 +21,8 @@ import graft.sources.EmblDataSource
   * whole files into tasks by bytes (`spark.sql.files.maxPartitionBytes`
   * / `openCostInBytes`), so a tiny-file storm costs tasks in proportion
   * to its volume, not its file count, while a large file gets a task of
-  * its own. Id resolution has two regimes: a broadcast id-map for small
-  * mappings and a shuffle join for UniProt-scale ones (~1e9 rows).
-  * `EnaMain.chooseBroadcastRegime` picks one from a bounded probe of
-  * the idmapping; the join condition is declarative either way.
+  * its own. Id resolution is one join-first plan whose join strategy
+  * Catalyst chooses; see [[resolveIds]].
   */
 object EnaPipeline {
 
@@ -109,72 +107,41 @@ object EnaPipeline {
     * and explode to the reference's 7-column output schema
     * (parse_embl.py:226-255).
     *
-    * Reverse-mapped ids keep multiplicity across protein ids (the
-    * reference emits one row per list element, parse_embl.py:236,252) —
-    * dedup happens only per protein id (`collect_set`, the A1 analog of
-    * mysql_database.py:120-129).
+    * One declarative plan: the narrow `(locus key, pid)` projection
+    * joins the raw idmapping (J1), `distinct` on `(key, pid,
+    * uniprot_id)` dedups per protein id (A1, mysql_database.py:120-129),
+    * and only the matches are grouped per locus before the left-outer
+    * join back. Reverse-mapped ids keep their multiplicity across
+    * protein ids, as the reference emits one row per list element
+    * (parse_embl.py:236,252). That relies on `protein_ids` being a
+    * distinct set per locus, which the segmenter guarantees; a repeated
+    * pid would otherwise count once.
+    *
+    * `broadcastIdMap` is a join hint only: `true` broadcasts the
+    * idmapping into J1, `false` leaves the strategy to Catalyst and
+    * AQE. The hint exists for sources whose size Catalyst cannot see,
+    * such as a V1 JDBC relation (see `EnaMain.chooseBroadcastRegime`).
     */
   def resolveIds(
       loci: Dataset[LocusRow],
       idmapping: DataFrame,
-      broadcastIdMap: Boolean = true): DataFrame = {
-    val mapped = idmapping
-      .groupBy(col("foreign_id"))
-      .agg(collect_set(col("uniprot_id")).as("mapped_ids")) // A1
-
-    // forced oracle runs pin the shuffle regime — the true-UniProt
-    // (~1e9 mapping rows) plan — regardless of the caller's choice
-    val resolved =
-      if (broadcastIdMap && !graft.Regimes.forceDistributed) {
-        // Broadcast regime: ship the aggregated foreign_id -> ids map to
-        // every executor and resolve each locus's protein_ids per-row —
-        // a map-side hash join with NO explode / join / regroup. The
-        // former declarative path exploded protein_ids and then
-        // re-assembled rows with a groupBy on a unique locus id: a full
-        // shuffle of every locus whose grouping reduces nothing. The map
-        // materializes driver-side exactly when a broadcast build side
-        // would have anyway.
-        val spark = loci.sparkSession
-        val idMap: Map[String, Array[String]] = mapped.collect()
-          .map(r => r.getString(0) -> r.getSeq[String](1).toArray).toMap
-        val bc = spark.sparkContext.broadcast(idMap)
-        val resolve = udf { pids: Seq[String] =>
-          // reference semantics (parse_embl.py:236): per-pid dedup (A1's
-          // collect_set) but multiplicity KEPT across protein ids
-          if (pids == null) Seq.empty[String]
-          else pids.flatMap(p => bc.value.getOrElse(p, Array.empty[String]))
-        }
-        loci.toDF().withColumn("rev_ids", resolve(col("protein_ids")))
-      } else {
-        // Shuffle regime (true UniProt scale, ~1e9 mapping rows). The
-        // wide locus rows go through ONE exchange (the final join-back);
-        // the J1 join and its regroup shuffle only the narrow
-        // (locus key, pid) projection — not the full rows, which the
-        // earlier explode->join->regroup-on-everything plan dragged
-        // through every stage.
-        // The locus key is the composite NATURAL key (file_path,
-        // ena_id, locus_idx) — unique per locus by construction (one
-        // EMBL record per ena_id per file; locus_idx numbers loci
-        // within the record, W1). A natural key agrees between the two
-        // evaluations of this subtree (rev and the join-back) under ANY
-        // upstream partitioning, unlike the previous
-        // monotonically_increasing_id, whose correctness hung on the
-        // scan being shuffle-free and listing order stable (a tripwire
-        // for any future upstream change).
-        val key = Seq("file_path", "ena_id", "locus_idx")
-        val keyed = loci.toDF()
-        val rev = keyed
-          .select((key.map(col) :+ explode(col("protein_ids")).as("pid")): _*)
-          .join(mapped, col("pid") === col("foreign_id")) // J1 inner: misses add nothing
-          .groupBy(key.map(col): _*)
-          .agg(flatten(collect_list(col("mapped_ids"))).as("rev_ids"))
-        keyed
-          .join(rev, key, "left_outer") // J2 via the null side
-          .withColumn("rev_ids",
-            coalesce(col("rev_ids"), typedLit(Seq.empty[String])))
-      }
-
-    resolved
+      broadcastIdMap: Boolean = false): DataFrame = {
+    // the composite natural key: unique per locus (one EMBL record per
+    // ena_id per file; locus_idx numbers loci within the record, W1),
+    // so the two reads of `keyed` agree under any upstream partitioning
+    val key = Seq("file_path", "ena_id", "locus_idx")
+    val keyCols = key.map(col)
+    val keyed = loci.toDF()
+    val side = if (broadcastIdMap) broadcast(idmapping) else idmapping
+    val rev = keyed
+      .select(keyCols :+ explode(col("protein_ids")).as("pid"): _*)
+      .join(side, col("pid") === col("foreign_id")) // J1 inner: misses add nothing
+      .select(keyCols :+ col("pid") :+ col("uniprot_id"): _*)
+      .distinct() // A1: per-pid dedup, multiplicity across pids kept
+      .groupBy(keyCols: _*)
+      .agg(collect_list(col("uniprot_id")).as("rev_ids"))
+    keyed
+      .join(rev, key, "left_outer") // J2: an unmapped locus gets null rev_ids
       .withColumn("ids_final",
         when(size(col("rev_ids")) > 0, col("rev_ids"))
           .otherwise(col("uniprot_ids"))) // X9 fallback coalesce
@@ -190,7 +157,7 @@ object EnaPipeline {
       spark: SparkSession,
       roots: Seq[String],
       idmapping: DataFrame,
-      broadcastIdMap: Boolean = true,
+      broadcastIdMap: Boolean = false,
       metrics: Option[SegMetrics] = None): DataFrame =
     resolveIds(readLoci(spark, roots, metrics = metrics), idmapping,
       broadcastIdMap)

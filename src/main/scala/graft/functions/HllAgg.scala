@@ -290,7 +290,7 @@ case class HllMerge(a: Expression, b: Expression) extends BinaryExpression {
       y.asInstanceOf[Array[Byte]], prettyName)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, (x, y) =>
-      s"graft.functions.HllAgg.union($x.clone(), $y, \"$prettyName\")")
+      s"graft.functions.HllAgg.union((byte[]) $x.clone(), $y, \"$prettyName\")")
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): HllMerge =
     copy(a = newLeft, b = newRight)

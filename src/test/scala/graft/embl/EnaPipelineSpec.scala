@@ -129,20 +129,65 @@ class EnaPipelineSpec extends AnyFunSuite with SparkSpec {
     assert(back.columns.length === 8)
   }
 
-  test("broadcast resolveIds is shuffle-free and agrees with the shuffle path") {
-    val bcast = EnaPipeline.enaTab(spark, Seq(root.toString), idmapping)
-    // the whole broadcast-regime pipeline is one shuffle-free pass:
-    // scan -> segment -> map-side resolve -> explode -> project
-    val plan = bcast.queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange"), s"unexpected shuffle in plan:\n$plan")
+  test("broadcast resolveIds plans one broadcast J1 and agrees without the hint") {
+    import org.apache.spark.sql.catalyst.expressions.ScalaUDF
+    import org.apache.spark.sql.catalyst.optimizer.BuildRight
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    val bcast = EnaPipeline.enaTab(spark, Seq(root.toString), idmapping,
+      broadcastIdMap = true)
+    val plan = bcast.queryExecution.sparkPlan
+    // J1: the one broadcast join keyed on foreign_id whose build side
+    // scans only the idmapping
+    val j1 = plan.collect { case j: BroadcastHashJoinExec => j }.filter { j =>
+      val (build, buildKeys) =
+        if (j.buildSide == BuildRight) (j.right, j.rightKeys) else (j.left, j.leftKeys)
+      buildKeys.exists(_.references.exists(_.name == "foreign_id")) &&
+        build.collectLeaves().forall(_.output.exists(_.name == "foreign_id"))
+    }
+    assert(j1.size === 1, s"no single broadcast J1 in plan:\n$plan")
+    // join first: nothing aggregates the idmapping (or the loci) below J1
+    assert(j1.head.collect { case a: BaseAggregateExec => a }.isEmpty,
+      s"aggregate below J1:\n$plan")
+    assert(!plan.exists(_.expressions.exists(_.exists(_.isInstanceOf[ScalaUDF]))),
+      s"UDF in plan:\n$plan")
 
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.drop("file_path").collect()
         .map(r => (r.getString(0), r.getString(1), r.getInt(2), r.getInt(3),
           r.getInt(4), r.getLong(5), r.getLong(6))).toSet
-    val shuffled = EnaPipeline.enaTab(spark, Seq(root.toString), idmapping,
+    val unhinted = EnaPipeline.enaTab(spark, Seq(root.toString), idmapping,
       broadcastIdMap = false)
-    assert(rows(bcast) === rows(shuffled))
+    assert(rows(bcast) === rows(unhinted))
+  }
+
+  test("multiplicity: overlapping id sets across pids and duplicate mapping rows") {
+    // per-pid dedup (A1), multiplicity across pids kept
+    // (parse_embl.py:236,252): X1.1 -> {Q1, Q2}, X2.1 -> {Q2, Q3}, so
+    // the locus emits Q2 twice and Q1, Q3 once each
+    val s = spark
+    import s.implicits._
+    val dir = Files.createTempDirectory("ena_multi")
+    writeGz(dir.resolve("wgs/public/mul/M1.dat.gz"),
+      """ID   MULTI01; SV 1; linear; genomic DNA; WGS; PRO; 1000 BP.
+        |OC   Bacteria; Proteobacteria.
+        |FT   CDS             1..100
+        |FT                   /protein_id="X1.1"
+        |FT                   /protein_id="X2.1"
+        |""".stripMargin)
+    val mapping = Seq(
+      ("X1.1", "Q1"), ("X1.1", "Q2"), ("X1.1", "Q1"),
+      ("X2.1", "Q2"), ("X2.1", "Q3"), ("X2.1", "Q3")
+    ).toDF("foreign_id", "uniprot_id")
+    val expected = Seq("Q1", "Q2", "Q2", "Q3")
+      .map(u => ("MULTI01", u, 1, 1, 1, 1L, 100L))
+    for (hint <- Seq(true, false)) {
+      val got = EnaPipeline.enaTab(spark, Seq(dir.toString), mapping,
+        broadcastIdMap = hint).collect()
+        .map(r => (r.getString(0), r.getString(1), r.getInt(2), r.getInt(3),
+          r.getInt(4), r.getLong(5), r.getLong(6))).toSeq.sorted
+      assert(got === expected, s"broadcastIdMap = $hint")
+    }
   }
 
   test("shuffle resolve keeps same-ena_id records in DIFFERENT files apart") {

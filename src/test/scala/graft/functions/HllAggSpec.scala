@@ -95,6 +95,25 @@ class HllAggSpec extends AnyFunSuite with SparkSpec {
     assert(java.util.Arrays.equals(merged, direct))
   }
 
+  test("graft_hll_merge's generated code compiles and matches the kernel") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.types.BinaryType
+    val a = sketch((0L until 3000L).map(key60), p = 10, partitions = 2)
+    val b = sketch((2000L until 6000L).map(key60), p = 10, partitions = 2)
+    // compiles the projection directly: a compile error throws here
+    // instead of falling back to interpreted evaluation
+    val proj = GenerateUnsafeProjection.generate(Seq(HllMerge(
+      BoundReference(0, BinaryType, nullable = true),
+      BoundReference(1, BinaryType, nullable = true))))
+    val merged = proj(InternalRow(a, b)).getBinary(0)
+    assert(java.util.Arrays.equals(merged, HllAgg.union(a.clone(), b, "spec")))
+    // the left input is cloned, not merged into in place
+    assert(java.util.Arrays.equals(a,
+      sketch((0L until 3000L).map(key60), p = 10, partitions = 2)))
+  }
+
   test("inclusion-exclusion overlap tracks the true intersection") {
     // A = [0, 30k), B = [20k, 50k): true overlap 10k of 40k-sized union
     val a = sketch((0L until 30000L).map(key60), p = 12, partitions = 4)

@@ -80,6 +80,52 @@ class JdbcIdmappingSpec extends AnyFunSuite with SparkSpec {
     assert(!EnaMain.chooseBroadcastRegime(df, maxRows = Int.MaxValue.toLong))
   }
 
+  test("broadcast hint: a JDBC idmapping broadcasts into J1 only when hinted") {
+    import org.apache.spark.sql.catalyst.optimizer.BuildRight
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    val s = spark
+    import s.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("jdbc_resolve")
+    val gz = dir.resolve("wgs/public/jdb/J1.dat.gz")
+    java.nio.file.Files.createDirectories(gz.getParent)
+    val out = new java.util.zip.GZIPOutputStream(java.nio.file.Files.newOutputStream(gz))
+    try out.write(
+      """ID   JDBC01; SV 1; linear; genomic DNA; WGS; PRO; 1000 BP.
+        |OC   Bacteria; Proteobacteria.
+        |FT   CDS             1..100
+        |FT                   /protein_id="F00042"
+        |FT                   /protein_id="F02499"
+        |FT   CDS             200..300
+        |FT                   /protein_id="UNMAPPED.1"
+        |FT                   /db_xref="UniProtKB/TrEMBL:U_FALL"
+        |""".stripMargin.getBytes("UTF-8"))
+    finally out.close()
+    val loci = graft.embl.EnaPipeline.readLoci(spark, Seq(dir.toString))
+    def resolve(hint: Boolean) = graft.embl.EnaPipeline.resolveIds(
+      loci, EnaMain.readIdmapping(spark, dbUrl), broadcastIdMap = hint)
+    // the idmapping is broadcast iff some broadcast join builds on
+    // foreign_id (Derby reports the column names upper-case)
+    def broadcastsJdbc(df: org.apache.spark.sql.DataFrame): Boolean =
+      df.queryExecution.sparkPlan.collect { case j: BroadcastHashJoinExec => j }
+        .exists { j =>
+          val buildKeys = if (j.buildSide == BuildRight) j.rightKeys else j.leftKeys
+          buildKeys.exists(_.references.exists(_.name.equalsIgnoreCase("foreign_id")))
+        }
+    // a JDBC relation reports no size, so only the hint broadcasts it;
+    // unhinted, Catalyst may broadcast the small loci side instead
+    val hinted = resolve(hint = true)
+    assert(broadcastsJdbc(hinted), hinted.queryExecution.sparkPlan)
+    val unhinted = resolve(hint = false)
+    assert(!broadcastsJdbc(unhinted), unhinted.queryExecution.sparkPlan)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select($"ena_id", $"uniprot_id", $"locus_count").as[(String, String, Int)]
+        .collect().toSeq.sorted
+    val expected = Seq(("JDBC01", "P00042", 1), ("JDBC01", "P02499", 1),
+      ("JDBC01", "U_FALL", 2))
+    assert(rows(hinted) === expected)
+    assert(rows(unhinted) === expected)
+  }
+
   test("bad URL fails fast — at plan build, before any scan launches") {
     // schema resolution connects eagerly, so a bad URL/credential dies
     // here — even earlier than main()'s explicit S8 preflight probe
