@@ -24,12 +24,14 @@ object Verify {
     graft.functions.GraftFunctions.ensureRegistered(spark)
     // SPARK_GRAFT_FORCE_DISTRIBUTED=1 pins every dual-regime operator
     // to its large-scale form (graft.Regimes), so this same dump +
-    // DuckDB compare hash-certifies the 100 TB plans — run once per
-    // round alongside the default-regime gate (r12 VERDICT #1).
+    // DuckDB compare hash-certifies the 100 TB plans, run alongside
+    // the default-regime gate.
     if (Regimes.forceDistributed)
       System.err.println(
-        "[verify] FORCED DISTRIBUTED REGIMES: union-find/InSet/" +
-          "single-window/broadcast-resolve fast paths disabled")
+        "[verify] FORCED DISTRIBUTED REGIMES: bounded driver collects " +
+          "(InSet barriers, gram-set and LM count maps, union-find, " +
+          "driver centrality and BPE), single-window ranks, literal " +
+          "bounds and file-byte fast paths disabled")
     new java.io.File(outDir).mkdirs()
     // dev-loop filter: SPARK_GRAFT_ONLY=q30_x,q31_y runs a subset
     // (the driver sets nothing, so its runs always dump everything)

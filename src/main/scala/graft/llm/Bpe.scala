@@ -283,16 +283,16 @@ object Bpe {
     * trainers do): training never iterates the corpus. ONE corpus
     * scan builds the `(word, count)` histogram, which is
     * VOCABULARY-sized, and the n-merge loop runs over that. Dual
-    * regime from there (the resolveIds/keepFilter probe pattern):
-    *  - a bounded probe collects the histogram when it fits
-    *    (`maxDriverVocab` rows) and the loop is a driver in-memory
-    *    pass — exact, and at real vocabularies (~1e6 words) a few
-    *    hundred MB of strings, the common case;
-    *  - an open vocabulary (or [[graft.Regimes.forceDistributed]])
-    *    keeps the histogram distributed: each ROUND is one
-    *    vocabulary-sized keyed pair-count aggregate (map-side
-    *    partials), a bounded top-k collect, and one UDF pass applying
-    *    a provably-sequential BATCH of disjoint merges (see
+    * regime from there ([[graft.Regimes.boundedRows]]):
+    *  - a histogram within [[MaxDriverVocab]] rows and
+    *    [[MaxDriverHistBytes]] is collected and the loop is a driver
+    *    in-memory pass — exact, and at real vocabularies (~1e6 words) a
+    *    few hundred MB of strings, the common case;
+    *  - an open vocabulary (or a forced distributed run) keeps the
+    *    histogram distributed, reading the checkpoint the probe filled:
+    *    each ROUND is one vocabulary-sized keyed pair-count aggregate
+    *    (map-side partials), a bounded top-k collect, and one UDF pass
+    *    applying a provably-sequential BATCH of disjoint merges (see
     *    [[trainDistributed]]), with per-round localCheckpoint +
     *    superseded-block release (the CC loop convention) — rounds
     *    scale as ~nMerges/256, not nMerges.
@@ -305,35 +305,32 @@ object Bpe {
   def bpeTrain(
       docs: DataFrame,
       nMerges: Int,
-      minPairCount: Long = 2L,
-      maxDriverVocab: Int = 1 << 20): Seq[(String, String, Long)] = {
+      minPairCount: Long = 2L): Seq[(String, String, Long)] = {
     require(nMerges >= 0, "nMerges must be non-negative")
     val hist = docs
       .select(explode(TextFns.regexTokens(col("text"))).as("word"))
       .groupBy(col("word")).agg(count(lit(1)).as("c"))
-    val effMax =
-      if (graft.Regimes.forceDistributed) 0 else maxDriverVocab
-    val probe =
-      if (effMax > 0) hist.limit(effMax + 1).collect()
-      else Array.empty[org.apache.spark.sql.Row]
-    // byte cap as well as row cap (the keepFilter/J1 convention): the
-    // driver loop holds every word EXPLODED to per-char pieces, so a
-    // corpus of pathological unbroken letter runs must route to the
-    // distributed loop rather than OOM the driver. ~64 B/char covers
-    // the piece-string and vector overhead.
-    def histBytes: Long = probe.foldLeft(0L)(
-      (acc, r) => acc + 64L * r.getString(0).length + 48L)
-    if (effMax > 0 && probe.length <= effMax &&
-        histBytes <= MaxDriverHistBytes)
-      trainOnHist(probe.map(r => (r.getString(0), r.getLong(1))),
-        nMerges, minPairCount)
-    else trainDistributed(docs.sparkSession, hist, nMerges, minPairCount)
+    // byte cap as well as row cap: the driver loop holds every word
+    // EXPLODED to per-char pieces, so a corpus of pathological unbroken
+    // letter runs must route to the distributed loop rather than OOM
+    // the driver. ~64 B/char covers the piece-string and vector
+    // overhead.
+    graft.Regimes.boundedRows(hist, MaxDriverVocab, MaxDriverHistBytes,
+        r => 64L * r.getString(0).length + 48L) match {
+      case Right(rows) =>
+        trainOnHist(rows.map(r => (r.getString(0), r.getLong(1))),
+          nMerges, minPairCount)
+      case Left(ck) => trainDistributed(docs.sparkSession, ck, nMerges, minPairCount)
+    }
   }
 
+  /** Above this many distinct words the histogram stays distributed. */
+  private val MaxDriverVocab = 1 << 20
+
   /** Estimated in-driver footprint cap for the training histogram
-    * (chars × piece overhead): ~1 GiB of budget at the default
-    * 1M-word vocab cap means words may average ~250 chars before the
-    * byte probe routes to the distributed loop.
+    * (chars × piece overhead): ~1 GiB of budget at the
+    * [[MaxDriverVocab]] cap means words may average ~250 chars before
+    * the byte probe routes to the distributed loop.
     */
   private val MaxDriverHistBytes = 1L << 30
 
@@ -427,6 +424,7 @@ object Bpe {
       .map { case (w, c) => (codePointPieces(w).toArray, c) }
       .toDF("pieces", "c")
       .localCheckpoint()
+    graft.operators.Checkpoints.release(hist) // the loop reads `words` only
     val acc = scala.collection.mutable.ArrayBuffer[(String, String, Long)]()
     lastDistributedRounds = 0
     var done = false

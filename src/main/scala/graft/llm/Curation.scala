@@ -57,8 +57,7 @@ object Curation {
       minMeanTokLen: Double = 2.0,
       maxMeanTokLen: Double = 12.0,
       blockSize: Long = 512,
-      groupWidth: Long = 4096,
-      inlineKeepListMax: Int = InlineKeepListMax): DataFrame = {
+      groupWidth: Long = 4096): DataFrame = {
     val sampled = Sampling.sampleCorpus(docs, sampleFraction, sampleSeed)
     // Each stage's keep-list is a BARRIER: downstream stages consume
     // their input corpus several times (dedup alone joins it 4×), and
@@ -75,81 +74,49 @@ object Curation {
     // at 100 TB.
     val clean = keepFilter(sampled, Decontaminate
       .decontaminate(sampled, evalDocs, decontamShingleK, maxOverlap)
-      .select(col("doc_id")), inlineKeepListMax)
+      .select(col("doc_id")))
     val unique = keepFilter(clean,
       TextDedup.dedupPipeline(clean, dedupShingleK, nHashes,
-        bands, threshold, prefixK, maxBucketWidth), inlineKeepListMax)
+        bands, threshold, prefixK, maxBucketWidth))
     val good = keepFilter(unique,
       TextAnalysis.qualityFilter(unique, minTokens, minTtr,
         maxStopwordRatio, minMeanTokLen, maxMeanTokLen)
-        .select(col("doc_id")), inlineKeepListMax)
+        .select(col("doc_id")))
     Packing.packBlocks(good, blockSize, groupWidth)
   }
 
-  /** Above this keep-list size the stage barrier broadcast-joins; at
-    * or below (and under [[InlineKeepListMaxBytes]]), the ids inline
-    * as one InSet filter. [[graft.Regimes.forceDistributed]] pins the
-    * barrier to the broadcast-join form so the oracle gate can certify
-    * the 100 TB plan.
+  /** Above this keep-list size the stage barrier joins the checkpoint;
+    * at or below (and under [[InlineKeepListMaxBytes]]), the ids inline
+    * as one InSet filter.
     */
-  private def InlineKeepListMax: Int =
-    if (graft.Regimes.forceDistributed) 0 else 100000
+  private val InlineKeepListMax = 100000
 
-  /** Byte cap on the inlined id list (r13, the ENA broadcast-regime
-    * octet-probe convention): [[InlineKeepListMax]] alone is a ROW
-    * cap, and 100k WIDE STRING doc_ids would bloat every task's
-    * serialized plan — the same wide-row trap the J1 byte probe
-    * already closes. 4 MiB of estimated id payload keeps the inlined
+  /** Byte cap on the inlined id list: [[InlineKeepListMax]] alone is a
+    * ROW cap, and 100k WIDE STRING doc_ids would bloat every task's
+    * serialized plan. 4 MiB of estimated id payload keeps the inlined
     * filter comfortably under task-binary budgets.
     */
   private val InlineKeepListMaxBytes = 4L << 20
 
-  /** Dual-regime stage barrier (r12, the resolveIds/J1 probe pattern;
-    * r13 materialize-once). `keepIds` is localCheckpointed FIRST, so
-    * the upstream stage's pipeline executes exactly once — the bounded
-    * probe and whichever consumer wins both read the checkpoint (the
-    * r12 cut probed the live plan, which ran the stage pipeline for
-    * the probe and AGAIN for the overflow checkpoint — a bounded 2×
-    * exactly in the 100 TB regime; the fix costs the small regime only
-    * a tiny id-list checkpoint write). If the probe fits (`≤
-    * maxInline` ids AND ≤ [[InlineKeepListMaxBytes]] estimated bytes),
-    * the collected ids ARE the barrier: every corpus consumer
-    * evaluates one codegen InSet filter fused into its scan, the
-    * checkpoint is released immediately, and no broadcast-build job
-    * runs per consumer. A keep-list that overflows either bound — the
-    * 100 TB regime — broadcast-joins the checkpoint exactly as before.
+  /** Dual-regime stage barrier ([[graft.Regimes.boundedRows]]).
+    * `keepIds` is checkpointed first, so the upstream stage's pipeline
+    * executes exactly once: the bounded probe and whichever consumer
+    * wins both read the checkpoint, never the live plan. If the probe
+    * fits both caps, the collected ids ARE the barrier: every corpus
+    * consumer evaluates one codegen InSet filter fused into its scan,
+    * and no broadcast-build job runs per consumer. A keep-list that
+    * overflows either cap (the 100 TB regime) joins the filled
+    * checkpoint; only doc_id lists ever pin, never wide corpus rows.
     */
-  private def keepFilter(
-      corpus: DataFrame, keepIds: DataFrame, maxInline: Int): DataFrame = {
-    // enforced here as well as in the default, so explicit caller
-    // values cannot re-enable the inline cut in forced oracle runs
-    val effMax = if (graft.Regimes.forceDistributed) 0 else maxInline
-    // LAZY checkpoint + ONE fused materialize-and-probe job (r22,
-    // guide §1.5/§2.4; the r21 form ran a count job and then a collect
-    // job). [[graft.operators.Checkpoints.countAndCollect]] drains
-    // every partition — completing the checkpoint exactly like the
-    // eager path — and ships the bounded id list back with the counts,
-    // so the inline regime pays ONE driver round trip per barrier.
-    // Jobs per barrier: inline 2 → 1, overflow 1 (unchanged — the
-    // join's first consumer materializes); the stage pipeline still
-    // executes exactly once.
-    val ck = keepIds.localCheckpoint(eager = false)
-    if (effMax > 0) {
-      val (n, probe) = graft.operators.Checkpoints.countAndCollect(ck, effMax)
-      if (n <= effMax) {
-        val idBytes = probe.foldLeft(0L)((acc, r) => acc + (r.get(0) match {
-          case s: String => 40L + 2L * s.length // object header + char payload
-          case _         => 16L                 // boxed numeric
-        }))
-        if (idBytes <= InlineKeepListMaxBytes) {
-          graft.operators.Checkpoints.release(ck)
-          return corpus.filter(
-            col("doc_id").isInCollection(probe.toSeq.map(_.get(0))))
-        }
-      }
+  private def keepFilter(corpus: DataFrame, keepIds: DataFrame): DataFrame =
+    graft.Regimes.boundedRows(keepIds, InlineKeepListMax, InlineKeepListMaxBytes,
+      r => r.get(0) match {
+        case s: String => 40L + 2L * s.length // object header + char payload
+        case _         => 16L                 // boxed numeric
+      }) match {
+      case Right(ids) => corpus.filter(col("doc_id").isInCollection(ids.toSeq.map(_.get(0))))
+      case Left(ck) => corpus.join(ck, Seq("doc_id"))
     }
-    corpus.join(ck, Seq("doc_id"))
-  }
 
   /** Order-independent corpus digest per `by` group: `bit_xor` over
     * the 60-bit md5 hash of each `(doc_id, text)` pair, plus doc and
@@ -250,7 +217,7 @@ object Curation {
     * then one global fold. n_dups = total copies − distinct contents
     * falls out of the same frame, with no countDistinct (whose
     * mixed-aggregate form Expands the input) and map-side partials
-    * throughout. An oversized eval set or `forceDistributed` keeps
+    * throughout. An oversized eval set, or a forced distributed run, keeps
     * the certified two-scan form whose contamination count crossJoins
     * in from [[Decontaminate.joinAudit]], the join regime, without
     * probing the eval set a second time.

@@ -65,7 +65,7 @@ object Decontaminate {
     * distinct, no doc_id groupBy, no join-back. Values are IDENTICAL
     * to the join form (the probe is exact membership, not a sketch —
     * same oracle). An OVERSIZED eval set (decontaminating against a
-    * prior training corpus) or `forceDistributed` keeps the certified
+    * prior training corpus), or a forced distributed run, keeps the certified
     * join form ([[joinAudit]]), whose eval side shuffles instead of
     * broadcasting. Each call builds its probe from `evalDocs` as they
     * are now; nothing is remembered between calls.
@@ -108,28 +108,30 @@ object Decontaminate {
     * membership test: `Some(hit)`, where `hit(gh)` is true iff the
     * gram is in the set (a [[graft.functions.LongCountMap]] probe, count
     * 1 per gram). `None` means "take the join regime": the set exceeds
-    * `maxRows`, or `forceDistributed` is on. One job counts the set and
-    * collects it when bounded.
+    * [[GramSetProbeMaxRows]], or the distributed regime is forced
+    * ([[graft.Regimes.boundedRows]]). One job drains the distinct set
+    * and collects it when bounded; the join regime derives its eval
+    * side from `evalDocs` again, so the set's checkpoint is released
+    * either way.
     */
   private[llm] def buildGramSetProbe(
       evalDocs: DataFrame,
-      shingleK: Int,
-      maxRows: Int = GramSetProbeMaxRows): Option[Column => Column] =
-    if (graft.Regimes.forceDistributed) None
-    else {
-      val spark = evalDocs.sparkSession
-      graft.functions.GraftFunctions.ensureRegistered(spark)
-      val grams = TextDedup.gramHashes(evalDocs, shingleK)
-        .select(col("gh")).distinct()
-      val (n, rows) = graft.operators.Checkpoints.countAndCollect(grams, maxRows)
-      if (n > maxRows) None
-      else {
+      shingleK: Int): Option[Column => Column] = {
+    val spark = evalDocs.sparkSession
+    graft.functions.GraftFunctions.ensureRegistered(spark)
+    graft.Regimes.boundedRows(
+      TextDedup.gramHashes(evalDocs, shingleK).select(col("gh")).distinct(),
+      GramSetProbeMaxRows) match {
+      case Left(ck) =>
+        graft.operators.Checkpoints.release(ck)
+        None
+      case Right(rows) =>
         val probe = graft.functions.LongCountMap.probe(
           spark.sparkContext.broadcast(graft.functions.LongCountMap.build(
             rows.iterator.map(_.getLong(0) -> 1L), rows.length)))
         Some(gh => probe(gh) > 0)
-      }
     }
+  }
 
   /** The ZERO-SHUFFLE audit kernel: one row per doc with the standard
     * `(doc_id, n_grams, n_hit, overlap)` statistics, computed entirely

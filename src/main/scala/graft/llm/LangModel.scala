@@ -55,7 +55,7 @@ import org.apache.spark.sql.functions._
   * built per call from the reference as it is now) and the corpus pass
   * is JOIN-FREE — three codegen'd O(1) probes per bigram in a
   * projection, one map-side-combined per-doc aggregation as the only
-  * exchange. An oversized model (or `forceDistributed`) keeps
+  * exchange. An oversized model (or a forced distributed run) keeps
   * equi-joins on the long keys, fronted by a distinct (doc, bigram)
   * pre-aggregation so the model join pays one row per distinct key.
   * Nothing in the plan is quadratic and nothing data-sized collects.
@@ -83,19 +83,12 @@ object LangModel {
     *               ~an order of magnitude below a uniform-ish floor
     *               for the test vocabularies while staying overflow-
     *               safe for any train count that fits a long / 2^20
-    * @param broadcastModelMaxRows model-entry bound above which the
-    *               count-map probe regime yields to the shuffle-join
-    *               form (see [[BroadcastModelMaxRows]]); exposed so a
-    *               deployment with tighter executor budgets can lower
-    *               it — and so the spec can exercise the oversized
-    *               path on a small fixture
     */
   def rareTransitionScore(
       docs: DataFrame,
       refDocs: DataFrame,
       rarity: Long = 256,
-      maxRareFrac: Double = 0.5,
-      broadcastModelMaxRows: Int = BroadcastModelMaxRows): DataFrame = {
+      maxRareFrac: Double = 0.5): DataFrame = {
     require(rarity > 0 && rarity <= (1L << 20),
       "rarity must be in (0, 2^20] (keeps rarity*(c_ab+1) exact)")
     require(maxRareFrac >= 0.0 && maxRareFrac <= 1.0,
@@ -125,46 +118,32 @@ object LangModel {
       .groupBy(col("x.t").as("t"), col("x.k").as("k"))
       .agg(count(lit(1)).as("c"))
 
-    // Dual regime (the keepFilter/J1 probe convention). The common
-    // case — a curated reference slice, bounded model — compiles the
-    // model into an EXACT broadcast count map ([[graft.functions
+    // Dual regime ([[graft.Regimes.boundedRows]]). The common case, a
+    // curated reference slice with a bounded model, compiles the model
+    // into an EXACT broadcast count map ([[graft.functions
     // .LongCountMap]], the exact member of the Bloom/CMS probe
     // family): both model lookups and the V scalar become codegen'd
     // O(1) probes in the corpus projection, so the bigram stream
-    // never shuffles and never joins — its only exchange is the
-    // map-side-combined per-doc aggregation. (The previous join form
-    // was at the planner's mercy: with AQE off the checkpoint's
-    // unknown stats demoted both model joins to sort-merge and the
-    // stream paid TWO full shuffles against a few thousand counters.)
-    // A model that overflows the bound — the Wikipedia-scale
-    // reference, or forceDistributed (oracle-certified) — keeps the
-    // shuffle-join form, fronted by a distinct (doc, bigram)
-    // pre-aggregation so the model join pays one row per distinct key.
+    // never shuffles and never joins; its only exchange is the
+    // map-side-combined per-doc aggregation. (A join form against a
+    // few thousand counters is at the planner's mercy: with AQE off
+    // the checkpoint's unknown stats demote both model joins to
+    // sort-merge and the stream pays TWO full shuffles.)
+    // A model over the bound (a Wikipedia-scale reference), or a
+    // forced distributed run, keeps the shuffle-join form, fronted by a
+    // distinct (doc, bigram) pre-aggregation so the model join pays
+    // one row per distinct key; it reads the model checkpoint the
+    // probe filled, so the model materializes once either way.
     // Key spaces inside the one map: unigram h in [0, 2^31); bigram
     // keys tagged with bit 62; V under the reserved key -2 (no data key
     // is negative). V = 0 (empty/token-free reference) raises at BUILD
-    // time in this regime — the predicate would be unsatisfiable and
-    // the gate would silently keep everything — and through the lazy
+    // time in this regime (the predicate would be unsatisfiable and
+    // the gate would silently keep everything) and through the lazy
     // vocab raise_error in the join regime.
-    //
-    // ONE job fills the model checkpoint and counts it, collecting the
-    // rows when bounded; an oversized model's filled checkpoint is what
-    // the join regime reads, so the model materializes once either way.
-    val model = modelFrame.localCheckpoint(eager = false)
-    val bounded =
-      if (graft.Regimes.forceDistributed) None
-      else {
-        val (n, rows) = graft.operators.Checkpoints
-          .countAndCollect(model, broadcastModelMaxRows)
-        if (n > broadcastModelMaxRows) None
-        else {
-          graft.operators.Checkpoints.release(model)
-          Some(rows)
-        }
-      }
+    val bounded = graft.Regimes.boundedRows(modelFrame, BroadcastModelMaxRows)
 
     val perDoc = bounded match {
-      case Some(rows) =>
+      case Right(rows) =>
         val vocabN = rows.count(_.getInt(0) == 0)
         require(vocabN > 0,
           "rareTransitionScore: reference corpus has an empty " +
@@ -183,7 +162,7 @@ object LangModel {
           .select(col("doc_id"), when(rareP, 1L).otherwise(0L).as("__r"))
           .groupBy(col("doc_id"))
           .agg(count(lit(1)).as("n_bigrams"), sum(col("__r")).as("n_rare"))
-      case None =>
+      case Left(model) =>
         val trainUni = model.filter(col("t") === 0)
           .select(col("k").as("uh"), col("c").as("c_a"))
         val trainBg = model.filter(col("t") === 1)

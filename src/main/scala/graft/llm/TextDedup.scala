@@ -927,7 +927,7 @@ object TextDedup {
     * corpus scale every round is shuffle-keyed on doc id — no
     * all-pairs anywhere.
     *
-    * ESCALATION (r8): `maxIter` is the TOTAL round budget. Propagation
+    * ESCALATION: `maxIter` is the TOTAL round budget. Propagation
     * runs at most `min(maxIter, escalateAfter)` rounds; if it has not
     * converged and budget remains, the graph has genuinely deep chains
     * (proven to exist: the 10× q80 run needed maxIter 20→80) and the
@@ -936,94 +936,45 @@ object TextDedup {
     * star forest in O(log n) rounds regardless of diameter. Both
     * algorithms compute the identical output relation (min reachable
     * id per member), so escalating never changes results — only the
-    * round count. With the defaults (20 > 8) deep graphs now converge
-    * where r7 hit the rail; a caller that sets `maxIter ≤
+    * round count. With the defaults (20 > 8) deep graphs converge
+    * instead of hitting the rail; a caller that sets `maxIter ≤
     * escalateAfter` keeps the strict propagation-only rail.
     *
-    * SMALL-GRAPH REGIME (r12): integral-id edge sets that a bounded
-    * probe shows ≤ `smallGraphMaxEdges` close via one driver-side
-    * union-find with min-root representatives — the same output
-    * relation, hash-identical, in 2 jobs instead of ~3 per round
+    * SMALL-GRAPH REGIME ([[graft.Regimes.boundedRows]]): integral-id
+    * edge sets of at most [[SmallGraphMaxEdges]] close via one
+    * driver-side union-find with min-root representatives — the same
+    * output relation, hash-identical, in 1 job instead of ~3 per round
     * (dup graphs are usually tiny next to their corpus, and the loop's
-    * scheduler floors dominated bench cost). Graphs over the bound —
-    * the 100 TB case — take the distributed loop unchanged; pass 0 to
-    * force it.
+    * scheduler floors dominate at that size). Graphs over the bound —
+    * the 100 TB case — and forced distributed runs take the
+    * distributed loop.
     */
   def duplicateComponents(
       pairs: DataFrame,
       maxIter: Int = 20,
-      escalateAfter: Int = 8,
-      smallGraphMaxEdges: Int = defaultSmallGraphMaxEdges): DataFrame = {
+      escalateAfter: Int = 8): DataFrame = {
     require(maxIter > 0, "maxIter must be positive")
     require(escalateAfter > 0, "escalateAfter must be positive")
     lastStarRounds = 0
-    val smallMax =
-      if (graft.Regimes.forceDistributed) 0 else smallGraphMaxEdges
-    // lazy checkpoint: the fused probe below (or, for non-integral ids
-    // and forced runs, the distributed loop's first round) materializes
-    // the symmetric edge set — no dedicated checkpoint job
-    val edges = pairs.select(col("da").as("a"), col("db").as("b"))
+    // The symmetric edge set is checkpointed lazily: the probe's drain
+    // (or, for non-integral ids and forced runs, the distributed loop's
+    // first round) fills it, with no dedicated checkpoint job. A graph
+    // within the bound closes with one driver-side union-find whose
+    // representative is the component MINIMUM — the exact relation the
+    // fixpoint computes. ~1e5 edges × 16 B is MBs on the driver; a
+    // graph over the bound takes the distributed loop below, which
+    // reads the blocks the drain already filled.
+    val symmetric = pairs.select(col("da").as("a"), col("db").as("b"))
       .union(pairs.select(col("db").as("a"), col("da").as("b")))
       .distinct()
-      .localCheckpoint(eager = false)
-    // SMALL-GRAPH REGIME (r12): near-dup graphs are usually tiny next
-    // to their corpus (edges ≈ dup pairs, not docs), and the
-    // distributed loop pays 2–3 scheduler round trips PER ROUND — at
-    // bench scale that is most of the operator's cost (q61: ~12 of 15
-    // jobs are loop floors). ONE fused materialize-and-probe job (r22,
-    // [[graft.operators.Checkpoints.countAndCollect]]): it drains the
-    // symmetric edge set — completing the lazy checkpoint — and ships
-    // the edges back with the counts, so a graph of ≤
-    // `smallGraphMaxEdges` edges of integral ids closes its components
-    // with one driver-side union-find whose representative is the
-    // component MINIMUM — the exact relation the fixpoint computes,
-    // hash-identical, in 1 job instead of 3×diameter. ~1e5 edges ×
-    // 16 B is MBs on the driver; a graph that overflows the probe
-    // takes the distributed loop below, which remains the 100 TB path
-    // (its blocks are already whole from the drain). Pass 0 to force
-    // the distributed loop (the rail/equivalence specs do).
-    val idType = edges.schema("a").dataType
+    val idType = symmetric.schema("a").dataType
     val integralIds =
       idType == org.apache.spark.sql.types.LongType ||
         idType == org.apache.spark.sql.types.IntegerType
-    val smallEdges: Option[Array[org.apache.spark.sql.Row]] =
-      if (integralIds && smallMax > 0) {
-        val (n, rows) =
-          graft.operators.Checkpoints.countAndCollect(edges, smallMax.toLong)
-        if (n <= smallMax) Some(rows) else None
-      } else None
-    if (smallEdges.isDefined) {
-      val es = smallEdges.get
-      graft.operators.Checkpoints.release(edges)
-      def idAt(r: org.apache.spark.sql.Row, i: Int): Long = r.get(i) match {
-        case l: java.lang.Long    => l
-        case n: java.lang.Integer => n.toLong
-      }
-      val parent = new java.util.HashMap[java.lang.Long, java.lang.Long]()
-      def find(x: Long): Long = {
-        var r = x
-        while ({ val p = parent.getOrDefault(r, r); p != r }) r = parent.get(r)
-        var c = x // path compression
-        while (c != r) { val n = parent.getOrDefault(c, c); parent.put(c, r); c = n }
-        r
-      }
-      es.foreach { row =>
-        val ra = find(idAt(row, 0)); val rb = find(idAt(row, 1))
-        if (ra != rb) { // smaller root absorbs: root IS the component min
-          if (ra < rb) parent.put(rb, ra) else parent.put(ra, rb)
-        }
-      }
-      val members = new java.util.TreeSet[java.lang.Long]()
-      es.foreach { r => members.add(idAt(r, 0)); members.add(idAt(r, 1)) }
-      def asId(v: Long): Any =
-        if (idType == org.apache.spark.sql.types.IntegerType) v.toInt else v
-      val outRows = new java.util.ArrayList[org.apache.spark.sql.Row](members.size())
-      members.forEach(id =>
-        outRows.add(org.apache.spark.sql.Row(asId(id), asId(find(id)))))
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id", idType, nullable = false),
-        org.apache.spark.sql.types.StructField("component", idType, nullable = false)))
-      return pairs.sparkSession.createDataFrame(outRows, schema)
+    val edges = graft.Regimes.boundedRows(symmetric,
+        if (integralIds) SmallGraphMaxEdges else 0) match {
+      case Right(es) => return unionFindComponents(pairs.sparkSession, es, idType)
+      case Left(ck) => ck
     }
     val propBudget = math.min(maxIter, escalateAfter)
     var labels = edges.select(col("a").as("id")).distinct()
@@ -1068,16 +1019,49 @@ object TextDedup {
     }
   }
 
-  /** Default small-graph probe bound for [[duplicateComponents]]
-    * (~1e5 edges × 16 B — MBs on the driver).
-    * [[graft.Regimes.forceDistributed]] pins it to 0 so the oracle
-    * gate certifies the distributed loop — the 100 TB plan — and not
-    * just the driver union-find cut (also enforced inside the method,
-    * so explicit caller values cannot re-enable the fast path in
-    * forced runs).
+  /** Above this many symmetric edges [[duplicateComponents]] keeps the
+    * distributed loop (~1e5 edges × 16 B — MBs on the driver).
     */
-  def defaultSmallGraphMaxEdges: Int =
-    if (graft.Regimes.forceDistributed) 0 else 1 << 17
+  private val SmallGraphMaxEdges = 1 << 17
+
+  /** The small-graph regime of [[duplicateComponents]]: one driver
+    * union-find over the collected symmetric edges `(a, b)` of
+    * integral `idType`, each member labelled with its component min.
+    */
+  private def unionFindComponents(
+      spark: org.apache.spark.sql.SparkSession,
+      es: Array[org.apache.spark.sql.Row],
+      idType: org.apache.spark.sql.types.DataType): DataFrame = {
+    def idAt(r: org.apache.spark.sql.Row, i: Int): Long = r.get(i) match {
+      case l: java.lang.Long    => l
+      case n: java.lang.Integer => n.toLong
+    }
+    val parent = new java.util.HashMap[java.lang.Long, java.lang.Long]()
+    def find(x: Long): Long = {
+      var r = x
+      while ({ val p = parent.getOrDefault(r, r); p != r }) r = parent.get(r)
+      var c = x // path compression
+      while (c != r) { val n = parent.getOrDefault(c, c); parent.put(c, r); c = n }
+      r
+    }
+    es.foreach { row =>
+      val ra = find(idAt(row, 0)); val rb = find(idAt(row, 1))
+      if (ra != rb) { // smaller root absorbs: root IS the component min
+        if (ra < rb) parent.put(rb, ra) else parent.put(ra, rb)
+      }
+    }
+    val members = new java.util.TreeSet[java.lang.Long]()
+    es.foreach { r => members.add(idAt(r, 0)); members.add(idAt(r, 1)) }
+    def asId(v: Long): Any =
+      if (idType == org.apache.spark.sql.types.IntegerType) v.toInt else v
+    val outRows = new java.util.ArrayList[org.apache.spark.sql.Row](members.size())
+    members.forEach(id =>
+      outRows.add(org.apache.spark.sql.Row(asId(id), asId(find(id)))))
+    val schema = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("doc_id", idType, nullable = false),
+      org.apache.spark.sql.types.StructField("component", idType, nullable = false)))
+    spark.createDataFrame(outRows, schema)
+  }
 
   /** Diagnostics: star rounds the LAST [[duplicateComponents]] /
     * [[starComponents]] call spent (0 when it did not escalate, and in
@@ -1228,18 +1212,17 @@ object TextDedup {
     * Scope: nodes are the docs that appear in ≥ 1 pair (an undirected
     * pair graph has no dangling nodes — every node has degree ≥ 1).
     *
-    * Dual regime (r18, the [[duplicateComponents]] union-find
-    * convention — r17 VERDICT called q144 "the suite's most
-    * leg-sensitive timing": the k per-round checkpoint jobs dominate
-    * and disperse when the graph is small): a pair list within
-    * `maxDriverEdges` collects once and the k integer-mass rounds run
-    * as plain Long loops on the driver — the arithmetic is the same
-    * order-free integer sum, so values are IDENTICAL, and the query
-    * costs exactly the pairs lineage + one collect. A larger graph —
-    * or [[graft.Regimes.forceDistributed]] — takes the distributed
-    * loop: each round one broadcast-free equi-join + keyed sum over
-    * node-sized frames, k rounds, k bounded shuffles, per-round
-    * checkpoints released, no iteration ever touches the corpus.
+    * Dual regime ([[graft.Regimes.boundedRows]]): the k per-round
+    * checkpoint jobs dominate and disperse when the graph is small, so
+    * a pair list within [[MaxDriverEdges]] collects once and the k
+    * integer-mass rounds run as plain Long loops on the driver — the
+    * arithmetic is the same order-free integer sum, so values are
+    * IDENTICAL, and the query costs exactly the pairs lineage + one
+    * collect. A larger graph, or a forced distributed run, takes the
+    * distributed loop: each round one broadcast-free equi-join + keyed
+    * sum over node-sized frames, k rounds, k bounded shuffles,
+    * per-round checkpoints released, no iteration ever touches the
+    * corpus.
     * Output: `(doc_id, mass, n_neighbors)`.
     */
   def pairGraphCentrality(
@@ -1251,30 +1234,18 @@ object TextDedup {
     require(iters >= 1 && iters <= 16, "iters must be in [1, 16]")
     require(dampNum > 0 && dampDen > dampNum, "damping must be in (0, 1)")
     // ONE execution of the (expensive — LSH candidate join + rerank)
-    // pairs lineage: pairs checkpoints FIRST, then symmetrization,
-    // degrees, the degree-annotated edges, and the node set all derive
-    // from checkpoints — never from the pairs plan again. (r18, the
-    // r17 #4 attribution: the old form checkpointed only the SYMMETRIC
-    // set, whose union's two branches each executed the full LSH
-    // lineage — measured 2.4 s of the 3.3 s sf1 total for a 2.5k-edge
-    // graph; re-running the lineage twice was the whole "drift".)
-    val p0 = pairs.select(col("da"), col("db")).localCheckpoint(eager = false)
-
-    // bounded regime: run the k rounds as driver Long loops — same
-    // order-free integer arithmetic, zero iteration jobs (see scaladoc).
-    // ONE fused materialize-and-probe job (r22, countAndCollect; the
-    // r21 form ran a count job and then a collect job): the drain
-    // completes the checkpoint either way, and an oversized graph
-    // ships back only per-partition prefixes, never the full pair
-    // list — the distributed loop then reads whole blocks.
-    if (!graft.Regimes.forceDistributed) {
-      val (n, probe) =
-        graft.operators.Checkpoints.countAndCollect(p0, MaxDriverEdges.toLong)
-      if (n <= MaxDriverEdges) {
-        graft.operators.Checkpoints.release(p0)
-        return driverCentrality(pairs.sparkSession, probe, iters, initMass,
-          dampNum, dampDen)
-      }
+    // pairs lineage: the probe checkpoints the pairs FIRST, then
+    // symmetrization, degrees, the degree-annotated edges, and the node
+    // set all derive from checkpoints, never from the pairs plan again
+    // (checkpointing only the SYMMETRIC set ran the full lineage once
+    // per union branch). The probe's drain fills that checkpoint either
+    // way, and an oversized graph ships back only per-partition
+    // prefixes, never the full pair list.
+    val p0 = graft.Regimes.boundedRows(
+        pairs.select(col("da"), col("db")), MaxDriverEdges) match {
+      case Right(probe) => return driverCentrality(pairs.sparkSession, probe,
+        iters, initMass, dampNum, dampDen)
+      case Left(ck) => ck
     }
 
     val sym = p0.select(col("da").as("a"), col("db").as("b"))
@@ -1327,8 +1298,7 @@ object TextDedup {
 
   /** Above this many pair rows the centrality iterations stay in the
     * distributed join loop instead of collecting to the driver.
-    * Honest accounting (r19 ADVICE — the old "two 8-byte longs ≈
-    * 64 MB" note ignored object overhead): the driver adjacency is a
+    * Accounting: the driver adjacency is a
     * boxed `HashMap[Long, HashSet[Long]]`, so each of the 2·E directed
     * entries costs a boxed Long + hash-set node (~50–100 B with
     * headers and table slack), and the collected `GenericRow`s add

@@ -153,9 +153,10 @@ private[sources] object EmblScanBuilder {
   * [[listFiles]] call. Spark's `InMemoryFileIndex` does the walk: it
   * skips `_`/`.`-prefixed names, lists wide trees in parallel and
   * builds no owner/permission-bearing `LocatedFileStatus` per file (on
-  * the local FS that copy forks a shell per file). One index per root,
-  * so a root given twice is read twice, where a single index over all
-  * roots would merge them. The walk lists a nonexistent root as empty;
+  * the local FS that copy forks a shell per file). Roots are qualified
+  * and deduplicated first, so a root given twice is listed and read
+  * once; each distinct root then gets its own index, keeping the files
+  * in root order. The walk lists a nonexistent root as empty;
   * here that is an error (matching `spark.read.parquet`), while an
   * existing but empty tree is a clean zero-partition scan.
   */
@@ -167,11 +168,13 @@ private[sources] class EmblFileIndex(
   private lazy val files: Seq[FileStatus] = {
     val keep = EmblFileIndex.pathMatcher(
       if (divisionPrune) Seq(PlanDataset.expression(EnaPipeline.DivisionPrune)) else Nil)
-    rootPaths.flatMap { p =>
+    rootPaths.map { p =>
       val fs = p.getFileSystem(hadoopConf)
       if (!fs.exists(p))
         throw new FileNotFoundException(s"embl source root does not exist: $p")
-      new InMemoryFileIndex(spark, Seq(fs.makeQualified(p)), EmblFileIndex.Listing, None)
+      fs.makeQualified(p)
+    }.distinct.flatMap { q =>
+      new InMemoryFileIndex(spark, Seq(q), EmblFileIndex.Listing, None)
         .allFiles().filter(keep).sortBy(_.getPath.toString)
     }
   }

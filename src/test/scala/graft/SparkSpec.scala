@@ -21,4 +21,11 @@ object TestSpark {
 
 trait SparkSpec {
   lazy val spark: SparkSession = TestSpark.spark
+
+  /** Runs `body` with [[graft.Regimes.forceDistributed]] on, so every
+    * dual-regime operator takes its distributed form. */
+  def forced[A](body: => A): A = {
+    sys.props("spark.graft.forceDistributed") = "true"
+    try body finally sys.props.remove("spark.graft.forceDistributed")
+  }
 }

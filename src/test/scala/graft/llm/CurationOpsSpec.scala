@@ -166,8 +166,7 @@ class CurationOpsSpec extends AnyFunSuite with SparkSpec {
         .withColumn("source", lit("web"))
     val inline = graft.llm.Curation.curate(docs, eval).collect()
       .map(_.toSeq).toSet
-    val joined = graft.llm.Curation
-      .curate(docs, eval, inlineKeepListMax = 0).collect()
+    val joined = forced { graft.llm.Curation.curate(docs, eval).collect() }
       .map(_.toSeq).toSet
     assert(inline === joined)
     assert(inline.nonEmpty)
@@ -233,8 +232,7 @@ class CurationOpsSpec extends AnyFunSuite with SparkSpec {
       intercept[IllegalArgumentException](
         graft.llm.Curation.releaseGate(corpus, eval, maxOverlap = bad))
     rejected()
-    sys.props("spark.graft.forceDistributed") = "true"
-    try rejected() finally sys.props.remove("spark.graft.forceDistributed")
+    forced { rejected() }
   }
 
   test("releaseGate: null-text docs count as dup copies (NULL-excluding distinct)") {

@@ -178,17 +178,16 @@ class DedupPropertySpec extends AnyFunSuite with SparkSpec {
     val s = spark
     import s.implicits._
     val p = Prop.forAll(Gen.chooseNum(2, 5)) { d =>
-      // smallGraphMaxEdges = 0: the budget boundary is a property of
-      // the DISTRIBUTED loop; the default regime solves these tiny
-      // graphs driver-side without any round budget (r12)
+      // forced: the budget boundary is a property of the DISTRIBUTED
+      // loop; the default regime solves these tiny graphs driver-side
+      // without any round budget
       val path = (0 until d).map(i => (i.toLong, (i + 1).toLong))
         .toDF("da", "db")
-      val ok = TextDedup.duplicateComponents(path, maxIter = d + 1,
-        escalateAfter = d + 1, smallGraphMaxEdges = 0).collect()
+      val ok = forced { TextDedup.duplicateComponents(path, maxIter = d + 1,
+        escalateAfter = d + 1).collect() }
       val converged = ok.length == d + 1 && ok.forall(_.getLong(1) == 0L)
-      val under = scala.util.Try(
-        TextDedup.duplicateComponents(path, maxIter = d,
-          escalateAfter = d, smallGraphMaxEdges = 0))
+      val under = scala.util.Try(forced {
+        TextDedup.duplicateComponents(path, maxIter = d, escalateAfter = d) })
       converged && under.isFailure &&
         under.failed.get.getMessage.contains("did not converge")
     }
@@ -202,11 +201,9 @@ class DedupPropertySpec extends AnyFunSuite with SparkSpec {
     // threw here; the default budget (prop 8 + star 12) now converges
     // because large-star/small-star halves chains: log2(101) ≈ 7 rounds
     val chain = (0L until 100L).map(i => (i, i + 1)).toDF("da", "db")
-    // r12: a graph this small is closed by the driver union-find
-    // regime; force the DISTRIBUTED path (smallGraphMaxEdges = 0) to
-    // exercise the escalation
-    val comp = TextDedup
-      .duplicateComponents(chain, smallGraphMaxEdges = 0).collect()
+    // a graph this small is closed by the driver union-find regime;
+    // force the DISTRIBUTED path to exercise the escalation
+    val comp = forced { TextDedup.duplicateComponents(chain).collect() }
     assert(comp.length === 101 && comp.forall(_.getLong(1) == 0L))
     // the default small-graph regime answers identically, in 2 jobs
     val compUf = TextDedup.duplicateComponents(chain).collect()
@@ -214,8 +211,7 @@ class DedupPropertySpec extends AnyFunSuite with SparkSpec {
     // the strict propagation-only rail is still available: budget
     // capped at escalateAfter leaves no star rounds and throws
     val ex = intercept[IllegalStateException] {
-      TextDedup.duplicateComponents(chain, maxIter = 8, escalateAfter = 8,
-        smallGraphMaxEdges = 0)
+      forced { TextDedup.duplicateComponents(chain, maxIter = 8, escalateAfter = 8) }
     }
     assert(ex.getMessage.contains("did not converge"))
   }
@@ -230,10 +226,9 @@ class DedupPropertySpec extends AnyFunSuite with SparkSpec {
     val p = Prop.forAll(edgeGen) { es =>
       val pairs = es.toDF("da", "db")
       // propagation only (escalateAfter = maxIter forbids the star
-      // switch; smallGraphMaxEdges = 0 forbids the union-find regime)
-      val viaProp = TextDedup
-        .duplicateComponents(pairs, 64, 64, smallGraphMaxEdges = 0)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      // switch; forcing the distributed regime forbids union-find)
+      val viaProp = forced { TextDedup.duplicateComponents(pairs, 64, 64).collect() }
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
       // default regime: driver union-find (these graphs are tiny)
       val viaUf = TextDedup.duplicateComponents(pairs, 64, 64)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -257,9 +252,8 @@ class DedupPropertySpec extends AnyFunSuite with SparkSpec {
     // alternation back into one-hop walking blows the bound loudly.
     for (n <- Seq(32, 128)) {
       val chain = (0L until n.toLong).map(i => (i, i + 1)).toDF("da", "db")
-      val out = TextDedup.duplicateComponents(chain, maxIter = 64,
-        escalateAfter = 1, smallGraphMaxEdges = 0)
-      val comp = out.collect()
+      val comp = forced { TextDedup.duplicateComponents(chain, maxIter = 64,
+        escalateAfter = 1).collect() }
       assert(comp.length === n + 1 && comp.forall(_.getLong(1) == 0L))
       val rounds = TextDedup.lastStarRounds
       val log2n = 32 - Integer.numberOfLeadingZeros(n)

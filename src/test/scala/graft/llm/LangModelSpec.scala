@@ -102,23 +102,21 @@ class LangModelSpec extends AnyFunSuite with SparkSpec {
 
   test("oversized-model regime: the shuffle-join path matches the " +
       "count-map probe path row for row (r17)") {
-    // broadcastModelMaxRows = 1 forces every model over the bound —
-    // exercising the oversized branch (the filled model checkpoint
-    // handed from the bound probe to the join regime) against the
-    // default probe regime on identical inputs; run the oversized form
-    // twice so a repeat call, which probes the reference again and
-    // fills a fresh checkpoint, is certified to match as well
+    // the forced run takes the shuffle-join branch over the model
+    // checkpoint; run it twice so a repeat call, which builds the model
+    // again into a fresh checkpoint, is certified to match as well
+    // (the probe-overflow handoff of a filled checkpoint is pinned by
+    // the boundedRows spec)
     val corpus = docs((0L until 40L).map(i =>
       i -> (if (i % 7 == 3) s"qq$i zz$i qq$i" else "the cat sat on the mat")): _*)
     val train = corpus.filter(org.apache.spark.sql.functions.col("doc_id") % 2 === 0)
-    def rows(bound: Int) = LangModel
-      .rareTransitionScore(corpus, train, rarity = 16,
-        broadcastModelMaxRows = bound)
+    def rows() = LangModel
+      .rareTransitionScore(corpus, train, rarity = 16)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getDouble(3), r.getBoolean(4))).toSet
-    val probe = rows(2000000)
-    assert(rows(1) === probe)
-    assert(rows(1) === probe) // repeat call: same rows
+    val probe = rows()
+    assert(forced { rows() } === probe)
+    assert(forced { rows() } === probe) // repeat call: same rows
   }
 
   test("an empty reference vocabulary raises instead of silently " +

@@ -188,9 +188,7 @@ class LlmLayerSpec extends AnyFunSuite with SparkSpec {
       .decontaminate(train, eval_, shingleK = 3, maxOverlap = 0.2)
       .orderBy(col("doc_id")).collect().toSeq.map(_.toSeq)
     val probe = run()
-    sys.props("spark.graft.forceDistributed") = "true"
-    val joined = try run()
-      finally sys.props.remove("spark.graft.forceDistributed")
+    val joined = forced { run() }
     assert(probe === joined)
     // the probe-regime keep rule must NOT be a Filter above the stats
     // projection: pushdown would substitute the whole tokenize+md5+
@@ -234,15 +232,13 @@ class LlmLayerSpec extends AnyFunSuite with SparkSpec {
     // round, so convergence needs ~diameter rounds — far past a small
     // maxIter, within a generous one
     val chain = (0L until 25L).map(i => (i, i + 1)).toDF("da", "db")
-    // force the distributed loop (r12: the default small-graph regime
+    // force the distributed loop (the default small-graph regime
     // closes a 25-edge graph on the driver and never hits the rail)
     val ex = intercept[IllegalStateException] {
-      TextDedup.duplicateComponents(chain, maxIter = 5, escalateAfter = 5,
-        smallGraphMaxEdges = 0)
+      forced { TextDedup.duplicateComponents(chain, maxIter = 5, escalateAfter = 5) }
     }
     assert(ex.getMessage.contains("did not converge"))
-    val comp = TextDedup.duplicateComponents(chain, maxIter = 40,
-      smallGraphMaxEdges = 0).collect()
+    val comp = forced { TextDedup.duplicateComponents(chain, maxIter = 40).collect() }
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(comp.size === 26 && comp.values.forall(_ == 0L))
   }
@@ -1442,11 +1438,7 @@ class LlmLayerSpec extends AnyFunSuite with SparkSpec {
     val d = (Seq.fill(10)("the") ++ Seq.fill(7)("thin") ++ Seq.fill(5)("ab"))
       .toDF("text")
     val driver = Bpe.bpeTrain(d, nMerges = 6, minPairCount = 2)
-    val dist = {
-      sys.props("spark.graft.forceDistributed") = "true"
-      try Bpe.bpeTrain(d, nMerges = 6, minPairCount = 2)
-      finally sys.props.remove("spark.graft.forceDistributed")
-    }
+    val dist = forced { Bpe.bpeTrain(d, nMerges = 6, minPairCount = 2) }
     assert(driver.nonEmpty && dist == driver)
   }
 
@@ -1464,11 +1456,7 @@ class LlmLayerSpec extends AnyFunSuite with SparkSpec {
     val d = (Seq.fill(10)("the") ++ Seq.fill(8)("😀") ++
       Seq.fill(6)("thin")).toDF("text")
     val driver = Bpe.bpeTrain(d, nMerges = 6, minPairCount = 2)
-    val dist = {
-      sys.props("spark.graft.forceDistributed") = "true"
-      try Bpe.bpeTrain(d, nMerges = 6, minPairCount = 2)
-      finally sys.props.remove("spark.graft.forceDistributed")
-    }
+    val dist = forced { Bpe.bpeTrain(d, nMerges = 6, minPairCount = 2) }
     assert(driver.nonEmpty && dist == driver)
     driver.foreach { case (a, b, _) =>
       assert((a + b).forall(_ < 0x80), s"non-ASCII rule leaked: ($a, $b)")
@@ -1498,9 +1486,7 @@ class LlmLayerSpec extends AnyFunSuite with SparkSpec {
     s0.sparkContext.addSparkListener(listener)
     val dist =
       try {
-        sys.props("spark.graft.forceDistributed") = "true"
-        try Bpe.bpeTrain(d, nMerges = 18, minPairCount = 2)
-        finally sys.props.remove("spark.graft.forceDistributed")
+        forced { Bpe.bpeTrain(d, nMerges = 18, minPairCount = 2) }
       } finally {
         // async listener bus: undercounting only loosens the < bound
         s0.sparkContext.removeSparkListener(listener)
@@ -1523,11 +1509,7 @@ class LlmLayerSpec extends AnyFunSuite with SparkSpec {
     // and batched-distributed must agree exactly.
     val d = (Seq.fill(10)("aab") ++ Seq.fill(10)("cd")).toDF("text")
     val driver = Bpe.bpeTrain(d, nMerges = 4, minPairCount = 2)
-    val dist = {
-      sys.props("spark.graft.forceDistributed") = "true"
-      try Bpe.bpeTrain(d, nMerges = 4, minPairCount = 2)
-      finally sys.props.remove("spark.graft.forceDistributed")
-    }
+    val dist = forced { Bpe.bpeTrain(d, nMerges = 4, minPairCount = 2) }
     assert(driver == Seq(("a", "a", 10L), ("aa", "b", 10L), ("c", "d", 10L)))
     assert(dist == driver)
     // round 1: {(a,a)} (tie-truncated); round 2: {(aa,b),(c,d)} (now

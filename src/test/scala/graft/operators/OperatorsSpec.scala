@@ -451,11 +451,7 @@ class OperatorsSpec extends AnyFunSuite with SparkSpec {
         Option(r.get(3)).map(_.asInstanceOf[Double]), r.getBoolean(4)))
       .toSeq
     val global = rows(EventAnalytics.quantileDrift(ev, threshold = 1.0))
-    val dist = {
-      sys.props("spark.graft.forceDistributed") = "true"
-      try rows(EventAnalytics.quantileDrift(ev, threshold = 1.0))
-      finally sys.props.remove("spark.graft.forceDistributed")
-    }
+    val dist = forced { rows(EventAnalytics.quantileDrift(ev, threshold = 1.0)) }
     assert(dist === global)
     // value spot-check: hour-3 median 4.0 lags hour-1 median 10.0
     assert(global.map(t => (t._2, t._4)) === Seq(

@@ -215,18 +215,14 @@ class PlanPropertiesSpec extends AnyFunSuite with SparkSpec {
     // forced = the 100 TB form: same values (oracle-certified), ZERO
     // pair candidates — no sequence replication anywhere; every
     // Generate is the rank form's fixed 2-way side tagger
-    val forced = {
-      sys.props("spark.graft.forceDistributed") = "true"
-      try planExt("q58_interval_join")
-      finally sys.props.remove("spark.graft.forceDistributed")
-    }
-    assert(!forced.contains("sequence("), forced)
+    val fPlan = forced { planExt("q58_interval_join") }
+    assert(!fPlan.contains("sequence("), fPlan)
     // r22: the rank form's tagger Generates sit behind the two
     // ExistingRDD fences (histogram + query side) — see the q64 pin
-    assert("Scan ExistingRDD".r.findAllIn(forced).size >= 2, forced)
-    val fGens = forced.linesIterator.filter(_.contains("Generate")).toSeq
-    assert(fGens.forall(_.contains("explode(array(struct(__side")), forced)
-    assert(!forced.contains("CartesianProduct"), forced)
+    assert("Scan ExistingRDD".r.findAllIn(fPlan).size >= 2, fPlan)
+    val fGens = fPlan.linesIterator.filter(_.contains("Generate")).toSeq
+    assert(fGens.forall(_.contains("explode(array(struct(__side")), fPlan)
+    assert(!fPlan.contains("CartesianProduct"), fPlan)
   }
 
   test("q84: segments are built per-row — no Generate below the dedup window") {
@@ -351,11 +347,7 @@ class PlanPropertiesSpec extends AnyFunSuite with SparkSpec {
     assert(!small.replace("graft_exact_percentile(", "")
       .contains("percentile("), small)
     // the forced/100 TB regime keeps the histogram guarantees below
-    val p = {
-      sys.props("spark.graft.forceDistributed") = "true"
-      try planExt("q50_exact_percentiles")
-      finally sys.props.remove("spark.graft.forceDistributed")
-    }
+    val p = forced { planExt("q50_exact_percentiles") }
     // no percentile() aggregate anywhere: exactness comes from the
     // (group, value) histogram + rank interpolation
     assert(!p.contains("percentile("), p)

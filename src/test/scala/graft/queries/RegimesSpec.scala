@@ -18,11 +18,6 @@ class RegimesSpec extends AnyFunSuite with SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
 
-  private def forced[A](body: => A): A = {
-    sys.props("spark.graft.forceDistributed") = "true"
-    try body finally sys.props.remove("spark.graft.forceDistributed")
-  }
-
   private def rows(name: String): Seq[Seq[Any]] =
     QueryPackExt.queries(name)(spark, sf).collect().toSeq.map(_.toSeq)
 
@@ -57,7 +52,7 @@ class RegimesSpec extends AnyFunSuite with SparkSpec {
       rows("q120_select_percentiles"))
   }
 
-  test("q29 ENA flagship: forced shuffle id-resolution is value-identical") {
+  test("q29 ENA flagship: forced run is value-identical") {
     assert(forced { rows("q29_ena_flagship") } == rows("q29_ena_flagship"))
   }
 

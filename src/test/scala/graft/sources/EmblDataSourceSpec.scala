@@ -114,12 +114,21 @@ class EmblDataSourceSpec extends AnyFunSuite with SparkSpec {
   test("multi-path load decodes the JSON-encoded paths option") {
     // load(p1, p2) ships paths as a JSON array string; split(",") used
     // to mangle it into bracket-wrapped nonexistent paths -> empty scan
-    val single = spark.read.format("embl").load(root).count()
-    val doubled = spark.read.format("embl").load(root, root).count()
-    assert(single > 0)
-    assert(doubled === 2 * single) // same tree listed twice
+    val one = spark.read.format("embl").load(root).count()
+    val other = spark.read.format("embl").load(smallFiles.toString).count()
+    val both = spark.read.format("embl").load(root, smallFiles.toString).count()
+    assert(one > 0 && other > 0)
+    assert(both === one + other)
     assert(EmblScanBuilder.parsePaths("""["/a/b","/c d"]""") === Seq("/a/b", "/c d"))
     assert(EmblScanBuilder.parsePaths("/a,/b") === Seq("/a", "/b"))
+  }
+
+  test("a root named twice is listed once") {
+    val once = spark.read.format("embl").load(root)
+    val twice = spark.read.format("embl").load(root, root)
+    def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    assert(rows(once).nonEmpty)
+    assert(rows(twice) === rows(once))
   }
 
   test("nonexistent root fails loudly instead of returning empty") {
