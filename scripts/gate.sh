@@ -61,7 +61,7 @@ python3 scripts/check_oracle.py "$SF" "$OUT" || fail "oracle compare"
 # 3b: the SAME compare with every dual-regime operator pinned to its
 # LARGE-SCALE form (graft.Regimes / SPARK_GRAFT_FORCE_DISTRIBUTED) —
 # hash-certifies the 100 TB plans (distributed CC loop, checkpoint
-# broadcast barriers, two-phase percentiles, shuffle id-resolve), not
+# broadcast barriers, two-phase percentiles, eval-gram joins), not
 # just the small-input fast paths (VERDICT r12 #1). Skippable while
 # iterating: GATE_SKIP_DISTRIBUTED=1.
 if [[ "${GATE_SKIP_DISTRIBUTED:-0}" != "1" ]]; then

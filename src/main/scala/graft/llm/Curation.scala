@@ -219,8 +219,8 @@ object Curation {
     * mixed-aggregate form Expands the input) and map-side partials
     * throughout. An oversized eval set, or a forced distributed run, keeps
     * the certified two-scan form whose contamination count crossJoins
-    * in from [[Decontaminate.joinAudit]], the join regime, without
-    * probing the eval set a second time.
+    * in from [[Decontaminate.joinAudit]], the join regime, over the
+    * eval gram set the probe checkpointed.
     */
   def releaseGate(
       docs: DataFrame,
@@ -235,7 +235,7 @@ object Curation {
     graft.functions.GraftFunctions.ensureRegistered(docs.sparkSession)
     val piiHit = when(col("text").rlike(Pii.AnyRe), 1L).otherwise(0L)
     val stats = Decontaminate.buildGramSetProbe(evalDocs, shingleK) match {
-      case Some(hit) =>
+      case Right(hit) =>
         val perRow = docs
           .select(col("text"), TextFns.tokenHashes(col("text")).as("hs"))
           .select(col("text"), size(col("hs")).as("__nt"),
@@ -269,7 +269,7 @@ object Curation {
             count(when(col("__ch").isNotNull, 1))).as("n_dups"),
           coalesce(sum(col("__pii")), lit(0L)).as("n_pii_docs"),
           coalesce(sum(col("__clean")), lit(0L)).as("n_clean"))
-      case None =>
+      case Left(evalGrams) =>
         val perContent = docs
           .groupBy(md5(col("text")).as("__ch"))
           .agg(
@@ -283,7 +283,7 @@ object Curation {
           (coalesce(sum(col("__cnt")), lit(0L)) -
             count(when(col("__ch").isNotNull, 1))).as("n_dups"),
           coalesce(sum(col("__pii")), lit(0L)).as("n_pii_docs"))
-        val clean = Decontaminate.joinAudit(docs, evalDocs, shingleK)
+        val clean = Decontaminate.joinAudit(docs, evalGrams, shingleK)
           .filter(col("overlap") <= maxOverlap)
           .agg(count(lit(1)).as("n_clean"))
         base.crossJoin(broadcast(clean))

@@ -45,9 +45,9 @@ object Decontaminate {
       "maxOverlap must be in [0, 1)")
     graft.functions.GraftFunctions.ensureRegistered(docs.sparkSession)
     buildGramSetProbe(evalDocs, shingleK) match {
-      case Some(hit) => probeAuditKept(docs, shingleK, hit, maxOverlap)
-      case None =>
-        joinAudit(docs, evalDocs, shingleK).filter(col("overlap") <= maxOverlap)
+      case Right(hit) => probeAuditKept(docs, shingleK, hit, maxOverlap)
+      case Left(evalGrams) =>
+        joinAudit(docs, evalGrams, shingleK).filter(col("overlap") <= maxOverlap)
     }
   }
 
@@ -67,7 +67,8 @@ object Decontaminate {
     * same oracle). An OVERSIZED eval set (decontaminating against a
     * prior training corpus), or a forced distributed run, keeps the certified
     * join form ([[joinAudit]]), whose eval side shuffles instead of
-    * broadcasting. Each call builds its probe from `evalDocs` as they
+    * broadcasting and reads the distinct eval grams the probe already
+    * checkpointed. Each call builds its probe from `evalDocs` as they
     * are now; nothing is remembered between calls.
     */
   def decontaminateAudit(
@@ -76,22 +77,22 @@ object Decontaminate {
       shingleK: Int = 3): DataFrame = {
     graft.functions.GraftFunctions.ensureRegistered(docs.sparkSession)
     buildGramSetProbe(evalDocs, shingleK) match {
-      case Some(hit) => probeAudit(docs, shingleK, hit)
-      case None => joinAudit(docs, evalDocs, shingleK)
+      case Right(hit) => probeAudit(docs, shingleK, hit)
+      case Left(evalGrams) => joinAudit(docs, evalGrams, shingleK)
     }
   }
 
-  /** [[decontaminateAudit]]'s join regime, for callers that already
-    * hold the oversized verdict and must not probe the eval set again.
+  /** [[decontaminateAudit]]'s join regime over `evalGrams`, the
+    * distinct eval gram set [[buildGramSetProbe]] returned.
     */
   private[llm] def joinAudit(
       docs: DataFrame,
-      evalDocs: DataFrame,
+      evalGrams: DataFrame,
       shingleK: Int): DataFrame =
     overlapFromGrams(
       docs.select(col("doc_id")),
       TextDedup.gramHashes(docs, shingleK).distinct(),
-      TextDedup.gramHashes(evalDocs, shingleK).select(col("gh")).distinct())
+      evalGrams)
 
   /** Above this many distinct eval grams the exact membership map
     * stays in the join regime instead of compiling into a broadcast
@@ -105,31 +106,29 @@ object Decontaminate {
   private val GramSetProbeMaxRows = 2000000
 
   /** Compile `evalDocs`' DISTINCT k-gram hashes into an exact
-    * membership test: `Some(hit)`, where `hit(gh)` is true iff the
+    * membership test: `Right(hit)`, where `hit(gh)` is true iff the
     * gram is in the set (a [[graft.functions.LongCountMap]] probe, count
-    * 1 per gram). `None` means "take the join regime": the set exceeds
-    * [[GramSetProbeMaxRows]], or the distributed regime is forced
-    * ([[graft.Regimes.boundedRows]]). One job drains the distinct set
-    * and collects it when bounded; the join regime derives its eval
-    * side from `evalDocs` again, so the set's checkpoint is released
-    * either way.
+    * 1 per gram). `Left(evalGrams)` means "take the join regime": the
+    * set exceeds [[GramSetProbeMaxRows]], or the distributed regime is
+    * forced ([[graft.Regimes.boundedRows]]). `evalGrams` is the
+    * distinct set's `gh` checkpoint — filled by the probe job when the
+    * set overflowed, lazy when forced — which the join regime reads as
+    * its eval side, so the eval grams are built once; like the other
+    * lazy fences it is released by
+    * [[graft.operators.Checkpoints.releaseLeaked]].
     */
   private[llm] def buildGramSetProbe(
       evalDocs: DataFrame,
-      shingleK: Int): Option[Column => Column] = {
+      shingleK: Int): Either[DataFrame, Column => Column] = {
     val spark = evalDocs.sparkSession
     graft.functions.GraftFunctions.ensureRegistered(spark)
     graft.Regimes.boundedRows(
       TextDedup.gramHashes(evalDocs, shingleK).select(col("gh")).distinct(),
-      GramSetProbeMaxRows) match {
-      case Left(ck) =>
-        graft.operators.Checkpoints.release(ck)
-        None
-      case Right(rows) =>
-        val probe = graft.functions.LongCountMap.probe(
-          spark.sparkContext.broadcast(graft.functions.LongCountMap.build(
-            rows.iterator.map(_.getLong(0) -> 1L), rows.length)))
-        Some(gh => probe(gh) > 0)
+      GramSetProbeMaxRows).map { rows =>
+      val probe = graft.functions.LongCountMap.probe(
+        spark.sparkContext.broadcast(graft.functions.LongCountMap.build(
+          rows.iterator.map(_.getLong(0) -> 1L), rows.length)))
+      gh => probe(gh) > 0
     }
   }
 
@@ -392,7 +391,7 @@ object Decontaminate {
     // use; an oversized set (or the forced-distributed certification)
     // keeps the join form below.
     val audited = buildGramSetProbe(evalDocs, shingleK) match {
-      case Some(exHit) =>
+      case Right(exHit) =>
         docs
           .select(col("doc_id"), TextFns.tokenHashes(col("text")).as("hs"))
           .select(col("doc_id"),
@@ -408,10 +407,8 @@ object Decontaminate {
               .otherwise(col("n_hit").cast("double") / col("n_grams"))
               .as("overlap"),
             col("bloom_hit"))
-      case None =>
-        val evalDistinct = TextDedup.gramHashes(evalDocs, shingleK)
-          .select(col("gh")).distinct()
-          .withColumn("ex", lit(1))
+      case Left(evalGrams) =>
+        val evalDistinct = evalGrams.withColumn("ex", lit(1))
         val perDoc = TextDedup.gramHashes(docs, shingleK).distinct()
           .join(evalDistinct, Seq("gh"), "left")
           .groupBy(col("doc_id"))

@@ -87,7 +87,8 @@ object Dsir {
     val thr = graft.operators.Percentiles
       .groupedExact(scored.withColumn("g", lit(1)), "g", "score",
         Seq(1.0 - keepFraction),
-        twoPhaseThreshold = graft.operators.Percentiles.formSentinel(raw))
+        singleWindow = graft.Regimes.small(graft.Regimes.atMostRows(
+          raw, graft.operators.Percentiles.SingleWindowMaxRows)))
       .select(col("p" + math.round((1.0 - keepFraction) * 100))
         .as("threshold"))
     scored.crossJoin(broadcast(thr))

@@ -1162,7 +1162,7 @@ object Similarity {
     *    fold the oracle mirrors.
     *  - threshold: [[graft.operators.Percentiles.groupedExact]] on the
     *    rounded sims — the scale-aware exact-quantile operator (value-
-    *    histogram form, two-phase past its row probe), matched by SQL
+    *    histogram form, two-phase past a row probe of the scan), matched by SQL
     *    `quantile_cont`. Thresholds broadcast back; the flag compares
     *    at 6 decimals on both engines. Rounded-to-9 sims keep the
     *    histogram far below corpus size but its domain is not a priori
@@ -1209,7 +1209,8 @@ object Similarity {
     val thr = graft.operators.Percentiles
       .groupedExact(scored, groupCol, "sim",
         Seq(outlierFraction),
-        twoPhaseThreshold = graft.operators.Percentiles.formSentinel(e))
+        singleWindow = graft.Regimes.small(graft.Regimes.atMostRows(
+          e, graft.operators.Percentiles.SingleWindowMaxRows)))
       .select(col(groupCol),
         round(col("p" + math.round(outlierFraction * 100)), 6).as("__thr"))
     scored.join(broadcast(thr), Seq(groupCol))

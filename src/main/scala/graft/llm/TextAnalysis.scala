@@ -494,17 +494,17 @@ object TextAnalysis {
     * provably small, and to the fully-parallel
     * [[familiarityBucketsApprox]] past `maxExactRows` — the same
     * bounded-probe auto-fallback shape as the ENA broadcast regime
-    * (`EnaMain.chooseBroadcastRegime`): `limit(n+1).count()` reads at
-    * most n+1 rows, so the decision never scans the corpus. The exact
-    * form stays what it was built to be — the oracle twin — without
-    * being the default anyone runs at 100 TB.
+    * (`EnaMain.chooseBroadcastRegime`): [[graft.Regimes.atMostRows]]
+    * reads at most n+1 rows per partition, so the decision never scans
+    * the corpus. The exact form stays what it was built to be — the
+    * oracle twin — without being the default anyone runs at 100 TB.
+    * The large form is approximate, so a forced run does not pin it.
     */
   def familiarityBucketsAuto(
       docs: DataFrame,
       n: Int = 3,
       maxExactRows: Long = 2000000L): DataFrame =
-    if (maxExactRows < Int.MaxValue &&
-        docs.limit(maxExactRows.toInt + 1).count() <= maxExactRows)
+    if (graft.Regimes.atMostRows(docs, maxExactRows))
       familiarityBuckets(docs, n)
     else familiarityBucketsApprox(docs, n)
 

@@ -88,27 +88,28 @@ object EventAnalytics {
     * a schema-mangled feed, or an upstream resample shows up as a
     * drift spike long before a mean would move.
     *
-    * Scale — DUAL REGIMES on both stages (r14, VERDICT r13 #7), all
-    * routed by ONE one-row probe job (min/max ts + non-null row
-    * count). The median stage takes the native buffering
-    * `graft_exact_percentile` aggregate under
-    * [[MaxBufferedDriftRows]] (one scan, one ObjectHashAggregate) and
-    * [[Percentiles.groupedExact]]'s window-keyed histogram (map-side
-    * partials, two-phase rank, state bounded by distinct values)
-    * above it or forced. The lag stage routes on the window count:
+    * Scale — DUAL REGIMES on both stages, all routed by ONE one-row
+    * probe job (min/max ts + non-null row count), read only through
+    * [[graft.Regimes.small]], so a forced run skips it. The median
+    * stage takes the native buffering `graft_exact_percentile`
+    * aggregate under [[MaxBufferedDriftRows]] (one scan, one
+    * ObjectHashAggregate) and [[Percentiles.groupedExact]]'s two-phase
+    * window-keyed histogram (map-side partials, state bounded by
+    * distinct values) above it or forced. The lag stage routes on the
+    * window count:
     *  - ≤ `maxGlobalLagWindows` windows (report-sized, the common
     *    monitoring case — e.g. a month of hourly windows is 720
     *    rows): a single-partition global `lag` window, which at that
     *    cardinality is the right plan, not a smell. The span bound
     *    decides cheaply when it can; a sparse feed that overshoots it
-    *    re-probes the ACTUAL distinct window count (bounded
-    *    limit-count, r14 VERDICT #7) before being sent distributed;
+    *    re-probes the ACTUAL distinct window count
+    *    ([[graft.Regimes.atMostRows]]) before being sent distributed;
     *  - more windows than that (multi-year fine-grained retention),
-    *    or [[graft.Regimes.forceDistributed]]: a range-partitioned
-    *    sort + `zipWithIndex` + keyed self-join on the index — the
-    *    previous PRESENT row exactly as `lag` defines it (window
-    *    starts are distinct group keys, so the total order is
-    *    unambiguous), with no single-task stage anywhere.
+    *    or forced: a range-partitioned sort + `zipWithIndex` + keyed
+    *    self-join on the index — the previous PRESENT row exactly as
+    *    `lag` defines it (window starts are distinct group keys, so
+    *    the total order is unambiguous), with no single-task stage
+    *    anywhere.
     * [[graft.operators.OperatorsSpec]] pins the two forms identical
     * on a gap-bearing fixture. p50 is rounded to 6dp BEFORE
     * differencing so drift inherits the cross-engine parity of the
@@ -125,19 +126,14 @@ object EventAnalytics {
       col(valueCol))
     // ONE probe job carries both routing decisions: the ts span sizes
     // the lag regime, and the row count rides along free to size the
-    // median regime (the q50 dual: native buffering aggregate under
-    // the bound, bounded-state histogram above it or forced)
-    val probe =
-      if (graft.Regimes.forceDistributed) None
-      else Some(events
-        .agg(min(col("ts")).cast("timestamp").as("lo"),
-          max(col("ts")).cast("timestamp").as("hi"),
-          count(col(valueCol)).as("nv"))
-        .head())
-    val smallMedians = probe.exists(b =>
-      !b.isNullAt(2) && b.getLong(2) <= MaxBufferedDriftRows)
+    // median regime
+    lazy val probe = events
+      .agg(min(col("ts")).cast("timestamp").as("lo"),
+        max(col("ts")).cast("timestamp").as("hi"),
+        count(col(valueCol)).as("nv"))
+      .head()
     val q =
-      if (smallMedians) {
+      if (graft.Regimes.small(probe.getLong(2) <= MaxBufferedDriftRows)) {
         graft.functions.GraftFunctions.ensureRegistered(events.sparkSession)
         w.filter(col(valueCol).isNotNull)
           .groupBy(col("win_start"))
@@ -145,36 +141,30 @@ object EventAnalytics {
             count(lit(1)).as("n"))
           .select(col("win_start"), round(col("__p50"), 6).as("p50"), col("n"))
       } else graft.operators.Percentiles
-        .groupedExact(w, "win_start", valueCol, Seq(0.5))
+        .groupedExact(w, "win_start", valueCol, Seq(0.5), singleWindow = false)
         .select(col("win_start"), round(col("p50"), 6).as("p50"), col("n"))
-    // Lag routing, two tiers (r14 VERDICT #7): span/windowLength is an
-    // UPPER BOUND on the populated window count, so when it already
-    // fits the global bound the common monitoring case routes with the
-    // one probe job it has — but a sparse feed (years of retention,
-    // a handful of populated windows) overshoots that bound without
-    // having many windows, so the overshoot case re-checks the ACTUAL
-    // distinct win_start count under a bounded limit(n+1).count probe
-    // (the never-a-full-result convention) before paying the
+    // Lag routing, two tiers: span/windowLength is an UPPER BOUND on
+    // the populated window count, so when it already fits the global
+    // bound the common monitoring case routes with the one probe job
+    // it has — but a sparse feed (years of retention, a handful of
+    // populated windows) overshoots that bound without having many
+    // windows, so the overshoot case re-checks the ACTUAL distinct
+    // win_start count under the bounded row probe before paying the
     // distributed lag's extra stages. A duration string durationSeconds
     // doesn't know (Spark's window() grammar is wider) skips the span
     // shortcut and goes straight to the distinct probe — window()
     // itself already validated the duration, and counting windows
     // needs no parse at all.
     val winSec = scala.util.Try(durationSeconds(windowLength)).toOption
-    val global = probe.exists { b =>
-      b.isNullAt(0) || {
-        val spanFits = winSec.exists { ws =>
+    val global = graft.Regimes.small(
+      probe.isNullAt(0) ||
+        winSec.exists { ws =>
           val spanSec =
-            (b.getTimestamp(1).getTime - b.getTimestamp(0).getTime) / 1000.0
+            (probe.getTimestamp(1).getTime - probe.getTimestamp(0).getTime) / 1000.0
           spanSec / ws + 2.0 <= maxGlobalLagWindows.toDouble
-        }
-        spanFits || {
-          val cap = math.min(maxGlobalLagWindows, Int.MaxValue.toLong - 1L)
-          w.select(col("win_start")).distinct()
-            .limit(cap.toInt + 1).count() <= cap
-        }
-      }
-    }
+        } ||
+        graft.Regimes.atMostRows(w.select(col("win_start")).distinct(),
+          maxGlobalLagWindows))
     val lagged =
       if (global) {
         val byStart = org.apache.spark.sql.expressions.Window
@@ -214,8 +204,8 @@ object EventAnalytics {
     // zipWithIndex launches its partition-size count job HERE, at
     // construction (unavoidable — the index needs per-partition
     // offsets). PERSIST the indexed rows so the heavy range-shuffle +
-    // sort lineage evaluates once, not once per self-join side below
-    // (r14 ADVICE); the blocks are released by Checkpoints.release on
+    // sort lineage evaluates once, not once per self-join side below;
+    // the blocks are released by Checkpoints.release on
     // the result (its plan scans this RDD) or the harness-level
     // releaseLeaked broom between queries.
     val rowRdd = sorted.rdd.zipWithIndex.map { case (r, i) =>

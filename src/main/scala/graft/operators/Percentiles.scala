@@ -21,9 +21,8 @@ import org.apache.spark.sql.functions._
   * `percentile_approx` (KLL-style sketch) remains the form for value
   * domains too large to histogram (continuous doubles at 100 TB):
   * bounded-memory sketches, rank error as the price. [[grouped]]
-  * switches on a bounded `limit(n+1).count()` probe — never a full
-  * scan — the same auto-fallback shape as
-  * `EnaMain.chooseBroadcastRegime` and
+  * switches on the bounded [[graft.Regimes.atMostRows]] probe — never
+  * a full scan — the same auto-fallback shape as
   * `TextAnalysis.familiarityBucketsAuto`.
   */
 object Percentiles {
@@ -32,87 +31,57 @@ object Percentiles {
 
   /** Above this group count, groupedExactSelect's pass-2 bounds ship
     * as a broadcast lookup join instead of inline literal when-chains
-    * (a G·P-conditional chain overruns codegen method limits).
-    * [[graft.Regimes.forceDistributed]] pins it to 0 so the oracle
-    * gate certifies the broadcast-lookup (scale) form.
+    * (a G·P-conditional chain overruns codegen method limits). A
+    * forced run ships them as the broadcast lookup (the scale form).
     */
-  private def LitChainMaxGroups: Int =
-    if (graft.Regimes.forceDistributed) 0 else 64
+  private val LitChainMaxGroups = 64
+
+  /** Row count up to which [[groupedExact]]'s single-window form is the
+    * cheaper one; callers size its `singleWindow` argument against it,
+    * on the input or on a cheap frame with as many rows. */
+  val SingleWindowMaxRows = 2000000L
 
   /** Exact interpolated percentiles from the value histogram — one row
     * per group: `p<NN>` per requested prob, plus `n`. NULL values are
     * excluded from rank space (SQL semantics); a group with only NULLs
     * is absent from the result.
+    *
+    * Running rank range per distinct value: this value covers 0-based
+    * ranks [__start, __cum). Two forms, bit-identical results (all
+    * count arithmetic is integer), picked by `singleWindow`:
+    *
+    *  - SINGLE-WINDOW (small inputs): one exchange, the group total
+    *    rides a second window over the same partitioning. With few
+    *    groups this serializes — one task per group — which is fine
+    *    up to [[SingleWindowMaxRows]] and cheapest in fixed stages.
+    *  - TWO-PHASE (at scale): the Packing/budgetSelect prefix-sum
+    *    decomposition. Values are range-bucketed (order-preserving
+    *    floor over the group's [min, max] span), per-(group, bucket)
+    *    totals cascade in a window over the TINY bucket frame, and
+    *    the within-bucket running sum rides a window keyed by the
+    *    COMPOSITE (group, bucket) — every heavy stage is parallel in
+    *    the bucket count, so 3 groups no longer mean 3 tasks.
+    *    (Measured at 10x lineitem, 6M rows: 7.96 s single-window vs
+    *    4.14 s two-phase; at sf0.1 the extra stages cost ~0.7 s,
+    *    hence the switch.)
+    * The choice is the caller's, who knows its scale or probes a cheap
+    * frame for it through [[graft.Regimes.small]], so that a forced
+    * run takes the two-phase form — the 100 TB plan — through the
+    * DuckDB gate.
     */
   def groupedExact(
       df: DataFrame,
       groupCol: String,
       valueCol: String,
       probs: Seq[Double],
-      twoPhaseThreshold: Long = 2000000L): DataFrame = {
-    require(probs.nonEmpty && probs.forall(p => p >= 0 && p <= 1),
-      "probs must be within [0, 1]")
-    val rows = df.filter(col(valueCol).isNotNull)
-    val hist = rows.groupBy(col(groupCol), col(valueCol))
-      .agg(count(lit(1)).as("__c"))
-    // Running rank range per distinct value: this value covers 0-based
-    // ranks [__start, __cum). Two forms, bit-identical results (all
-    // count arithmetic is integer), chosen by a bounded row probe (the
-    // same never-a-full-scan switch as [[grouped]]):
-    //
-    //  - SINGLE-WINDOW (small inputs): one exchange, the group total
-    //    rides a second window over the same partitioning. With few
-    //    groups this serializes — one task per group — which is fine
-    //    under the probe bound and cheapest in fixed stages.
-    //  - TWO-PHASE (at scale): the Packing/budgetSelect prefix-sum
-    //    decomposition. Values are range-bucketed (order-preserving
-    //    floor over the group's [min, max] span), per-(group, bucket)
-    //    totals cascade in a window over the TINY bucket frame, and
-    //    the within-bucket running sum rides a window keyed by the
-    //    COMPOSITE (group, bucket) — every heavy stage is parallel in
-    //    the bucket count, so 3 groups no longer mean 3 tasks.
-    //    (Measured at 10x lineitem, 6M rows: 7.96 s single-window vs
-    //    4.14 s two-phase; at sf0.1 the extra stages cost ~0.7 s,
-    //    hence the switch.)
-    // Sentinel thresholds skip the probe JOB entirely — for callers
-    // that already know their scale (the resolveBits "caller knows the
-    // corpus" convention): <= 0 forces two-phase, >= Int.MaxValue
-    // forces single-window; anything between probes with a bounded
-    // limit+count (clamped before toInt so a large Long can't wrap
-    // negative into limit()).
-    // forceDistributed overrides even caller-pinned thresholds (q50
-    // pins Long.MaxValue as "caller knows the oracle SF"): the forced
-    // oracle run exists precisely to push the bit-identical TWO-PHASE
-    // form — the 100 TB plan — through the DuckDB gate.
-    val single =
-      if (graft.Regimes.forceDistributed) false
-      else if (twoPhaseThreshold <= 0L) false
-      else if (twoPhaseThreshold >= Int.MaxValue.toLong) true
-      else rows.limit(twoPhaseThreshold.toInt + 1).count() <= twoPhaseThreshold
-    groupedExactFromHist(hist, groupCol, valueCol, probs, single)
-  }
-
-  /** The histogram-input form of [[groupedExact]] (r13): callers that
-    * ALREADY hold a `(group, value, __c)` count frame — e.g. q49's
-    * fused sketch query, whose one corpus pass builds histograms for
-    * several kinds at once — interpolate from it directly, skipping
-    * the internal groupBy. `hist` must carry the count in a `__c`
-    * column and contain no NULL `valueCol` rows (SQL rank-space
-    * semantics are the caller's job here). Form choice is the
-    * caller's too ([[formSentinel]] for probing);
-    * [[graft.Regimes.forceDistributed]] still pins two-phase.
-    */
-  def groupedExactFromHist(
-      hist: DataFrame,
-      groupCol: String,
-      valueCol: String,
-      probs: Seq[Double],
       singleWindow: Boolean): DataFrame = {
     require(probs.nonEmpty && probs.forall(p => p >= 0 && p <= 1),
       "probs must be within [0, 1]")
-    val single = singleWindow && !graft.Regimes.forceDistributed
+    val hist = df.filter(col(valueCol).isNotNull)
+      .groupBy(col(groupCol), col(valueCol))
+      .agg(count(lit(1)).as("__c"))
     val cum =
-      if (single) {
+      if (singleWindow) {
         val byValue = Window.partitionBy(col(groupCol)).orderBy(col(valueCol))
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)
         val wholeGroup = Window.partitionBy(col(groupCol))
@@ -123,9 +92,9 @@ object Percentiles {
       } else {
         // The bucketed decomposition is [[PrefixSum]] verbatim:
         // [[PrefixSum.withRangeBucket]] holds the order-preserving
-        // bucket derivation and its NaN/null/±Inf routing (the r8
-        // ADVICE cases), [[PrefixSum.inclusive]] the offset cascade +
-        // in-bucket window; `__n` rides the tiny phase-2 frame.
+        // bucket derivation and its NaN/null/±Inf routing,
+        // [[PrefixSum.inclusive]] the offset cascade + in-bucket
+        // window; `__n` rides the tiny phase-2 frame.
         val histB = PrefixSum.withRangeBucket(
           hist, Seq(groupCol), col(valueCol), 256, "__b")
         PrefixSum.inclusive(histB, Seq(groupCol), "__b",
@@ -149,21 +118,6 @@ object Percentiles {
     cum.groupBy(col(groupCol))
       .agg(aggs.head, aggs.tail: _*)
   }
-
-  /** Resolve [[groupedExact]]'s form sentinel by probing a CHEAP
-    * upstream frame whose row count equals (or upper-bounds) the
-    * scored frame's — so callers whose percentile input is an
-    * expensive derived subplan (a cosine join, a token-bucket scoring
-    * pass) never re-execute it just to route: the probe is one bounded
-    * scan of `cheap`, and the returned sentinel makes the
-    * [[groupedExact]] call itself probe-free.
-    */
-  def formSentinel(cheap: DataFrame, twoPhaseThreshold: Long = 2000000L): Long =
-    if (twoPhaseThreshold <= 0L || twoPhaseThreshold >= Int.MaxValue.toLong)
-      twoPhaseThreshold
-    else if (cheap.limit(twoPhaseThreshold.toInt + 1).count() <= twoPhaseThreshold)
-      Long.MaxValue
-    else 0L
 
   /** Exact interpolated percentiles by SKETCH-GUIDED BAND SELECTION —
     * the third exact form, for the regime where [[groupedExact]]'s
@@ -257,7 +211,8 @@ object Percentiles {
 
     if (gInfoFirst.isEmpty) {
       // no non-null rows at all: empty result, same as groupedExact
-      return groupedExact(rows, groupCol, valueCol, probs)
+      return groupedExact(rows, groupCol, valueCol, probs,
+        singleWindow = graft.Regimes.small(true))
     }
 
     // SMALL-GROUP GUARD (found by the sf0.001 plan audit): the sketch's
@@ -269,7 +224,7 @@ object Percentiles {
     // bounds with a RANK-based guard of ~8/n — ≥ ~7 ranks of margin by
     // construction, one extra tiny pass paid only in the regime where
     // the group is small by definition (big-data groups never re-pass).
-    // The guard is PER GROUP (r11 ADVICE: one global 8/min(n) let a
+    // The guard is PER GROUP (one global 8/min(n) would let a
     // single tiny group widen every other weak group's band toward its
     // full width, inflating the pass-2 collect): groups batch by
     // floor(log2 n), each batch gets 8/2^⌊log2 n⌋ ∈ (8/n, 16/n] — at
@@ -314,8 +269,7 @@ object Percentiles {
       }
 
     // ---- pass 2: classify rows against the per-group bounds. Two
-    // regimes (r12, closes the r12 self-review codegen item): at
-    // report-sized group counts the bounds inline as literal
+    // regimes: at report-sized group counts the bounds inline as literal
     // when-chains — pure codegen, no join operator at all — but the
     // chain is G·P nested conditionals, which overruns the JIT/codegen
     // method-size limit as G grows. Past `LitChainMaxGroups` the
@@ -337,7 +291,7 @@ object Percentiles {
         .collect()
     }
     val classified =
-      if (gInfo.size <= LitChainMaxGroups) {
+      if (graft.Regimes.small(gInfo.size <= LitChainMaxGroups)) {
         def litChain(pick: Any => Double): Column =
           gInfo.foldLeft(lit(Double.NaN)) { case (acc, (gv, _)) =>
             val cond = if (gv == null) col(groupCol).isNull
@@ -423,7 +377,9 @@ object Percentiles {
   }
 
   /** Auto-routing entry point: exact histogram interpolation while the
-    * input is provably small (bounded probe), sketch past the cap.
+    * input is provably small (bounded probe), sketch past the cap. The
+    * sketch is approximate, so a forced run does not pin it; only the
+    * exact form's rank form is gated.
     */
   def grouped(
       df: DataFrame,
@@ -431,10 +387,12 @@ object Percentiles {
       valueCol: String,
       probs: Seq[Double] = Seq(0.5, 0.9),
       maxExactRows: Long = 2000000L,
-      accuracy: Int = 10000): DataFrame = {
-    val exact = maxExactRows < Int.MaxValue &&
-      df.limit(maxExactRows.toInt + 1).count() <= maxExactRows
-    if (exact) groupedExact(df, groupCol, valueCol, probs)
+      accuracy: Int = 10000): DataFrame =
+    if (graft.Regimes.atMostRows(df, maxExactRows))
+      groupedExact(df, groupCol, valueCol, probs,
+        // under a cap this low the first probe already bounds the rows
+        singleWindow = graft.Regimes.small(
+          maxExactRows <= SingleWindowMaxRows || graft.Regimes.atMostRows(
+            df.filter(col(valueCol).isNotNull), SingleWindowMaxRows)))
     else groupedApprox(df, groupCol, valueCol, probs, accuracy)
-  }
 }

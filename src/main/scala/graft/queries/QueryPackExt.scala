@@ -817,25 +817,21 @@ object QueryPackExt {
 
   private val q49 = Q("q49_approx_sketches",
     (s, dir) => {
-      // both forms resolve graft_* aggregates since r14 — register
-      // for callers that didn't come through Bench/Verify
+      // both forms resolve graft_* aggregates — register for callers
+      // that didn't come through Bench/Verify
       graft.functions.GraftFunctions.ensureRegistered(s)
       val li = t(s, dir, "lineitem")
-      // dual regime (r13): routes small inputs to the branched form
+      // dual regime: routes small inputs to the branched form
       // (everything hides behind the sketch stage) and scan-dominated
       // inputs to the fused two-scan form. The probe currency is FILE
       // BYTES — one driver-side FS stat, free at any scale — because
       // scan cost is exactly what the cut trades on (a row-count
       // limit-probe measured as a full extra scan job per run at
-      // bench scale). forceDistributed pins fused so the oracle gate
-      // certifies the 100 TB plan.
-      val fused = graft.Regimes.forceDistributed || {
-        val p = new org.apache.hadoop.fs.Path(s"$dir/lineitem.parquet")
-        scala.util.Try(p.getFileSystem(s.sessionState.newHadoopConf())
-          .getContentSummary(p).getLength).getOrElse(Long.MaxValue) >
-          (128L << 20)
-      }
-      (if (fused) q49Fused(li) else q49Branched(li))
+      // bench scale). A forced run takes the fused form, so the
+      // oracle gate certifies the 100 TB plan.
+      val branched = graft.Regimes.small(graft.Regimes.atMostFileBytes(
+        s, s"$dir/lineitem.parquet", 128L << 20))
+      (if (branched) q49Branched(li) else q49Fused(li))
         .harnessSorted(col("l_returnflag"))
     },
     Some("""
@@ -846,7 +842,7 @@ object QueryPackExt {
       FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag"""))
 
   private val q50 = Q("q50_exact_percentiles",
-    // exact percentiles, dual regime (r14): under the q49-convention
+    // exact percentiles, dual regime: under the q49-convention
     // 128 MiB file-byte probe, the native `graft_exact_percentile`
     // aggregate — one scan, one ObjectHashAggregate whose cost IS the
     // sort+interpolate arithmetic (primitive double-array state;
@@ -860,14 +856,9 @@ object QueryPackExt {
     (s, dir) => {
       graft.functions.GraftFunctions.ensureRegistered(s)
       val li = t(s, dir, "lineitem")
-      val small = !graft.Regimes.forceDistributed && {
-        val p = new org.apache.hadoop.fs.Path(s"$dir/lineitem.parquet")
-        scala.util.Try(p.getFileSystem(s.sessionState.newHadoopConf())
-          .getContentSummary(p).getLength).getOrElse(Long.MaxValue) <=
-          (128L << 20)
-      }
       val q =
-        if (small)
+        if (graft.Regimes.small(graft.Regimes.atMostFileBytes(
+            s, s"$dir/lineitem.parquet", 128L << 20)))
           li.filter(col("l_extendedprice").isNotNull)
             .groupBy(col("l_returnflag"))
             .agg(
@@ -879,7 +870,7 @@ object QueryPackExt {
               round(col("p90r"), 6).as("p90"), col("n"))
         else graft.operators.Percentiles
           .groupedExact(li, "l_returnflag", "l_extendedprice",
-            Seq(0.5, 0.9), twoPhaseThreshold = 0L)
+            Seq(0.5, 0.9), singleWindow = false)
           .select(col("l_returnflag"),
             round(col("p50"), 6).as("p50"),
             round(col("p90"), 6).as("p90"), col("n"))
@@ -1057,14 +1048,14 @@ object QueryPackExt {
     * Spark's planner would nested-loop. The oracle is the PLAIN
     * overlap join (partitioning-only rewrites; results identical).
     *
-    * DUAL REGIME (r14 — the sf1 run caught the pair path at 123 s
-    * against DuckDB's 11 s): pair counts here are QUADRATIC in
+    * DUAL REGIME (an sf1 run caught the pair path at 123 s against
+    * DuckDB's 11 s): pair counts here are QUADRATIC in
     * per-day order density (every 7-day window overlaps ~15 days ×
     * density others), so 10× the orders over the same date span is
     * ~100× the pairs. Under the probe bound the bucketized pair join
     * runs — the pair-level operator demo, each pair exactly once.
-    * Above it (or [[graft.Regimes.forceDistributed]], which the
-    * forced oracle leg uses to hash-certify this form) the query
+    * Above it (or forced, which the oracle leg uses to
+    * hash-certify this form) the query
     * routes to [[graft.operators.IntervalJoin.countOverlaps]]'s rank
     * form MINUS ONE: `a ⊆ b` row-for-row and an interval always
     * overlaps itself, so the self-inclusive rank count − 1 is
@@ -1087,14 +1078,9 @@ object QueryPackExt {
       // driver-side FS stat, no probe job): 16 MiB of orders parquet
       // ≈ 600k rows, past where the quadratic pair count outruns the
       // rank form's fixed stage cost
-      val usePair = !graft.Regimes.forceDistributed && {
-        val p = new org.apache.hadoop.fs.Path(s"$dir/orders.parquet")
-        scala.util.Try(p.getFileSystem(s.sessionState.newHadoopConf())
-          .getContentSummary(p).getLength).getOrElse(Long.MaxValue) <=
-          (16L << 20)
-      }
       val counted =
-        if (usePair)
+        if (graft.Regimes.small(graft.Regimes.atMostFileBytes(
+            s, s"$dir/orders.parquet", 16L << 20)))
           graft.operators.IntervalJoin
             // caller-knows width: both sides are 8-day windows, so the
             // optimal w* = sqrt(8*8) = 8 — skips the derivedWidth

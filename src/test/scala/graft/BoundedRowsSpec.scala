@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.col
@@ -61,39 +60,13 @@ class BoundedRowsSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("forced distributed regime or a zero row cap: no job runs") {
-    val sc = spark.sparkContext
-    val group = s"boundedRows-${System.nanoTime()}"
-    val sentinel = group + "-sentinel"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val sentinelJobs = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    val sentinelDone = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        Option(j.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`group`) => jobs.incrementAndGet()
-          case Some(`sentinel`) => sentinelJobs.add(j.jobId)
-          case _ =>
-        }
-      override def onJobEnd(j: SparkListenerJobEnd): Unit =
-        if (sentinelJobs.contains(j.jobId)) sentinelDone.countDown()
-    }
     val (df, evals) = counted()
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "measured")
-      val (viaFlag, viaCap) =
-        try (forced { Regimes.boundedRows(df, 1000) }, Regimes.boundedRows(df, 0))
-        finally sc.clearJobGroup()
-      // the bus is ordered: once the sentinel's end is seen, every
-      // event of the measured calls has been seen too
-      sc.setJobGroup(sentinel, "sentinel")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(sentinelDone.await(30, java.util.concurrent.TimeUnit.SECONDS),
-        "listener bus did not drain")
-      assert(jobs.get === 0)
-      assert(evals.value === 0L)
-      Seq(viaFlag, viaCap).map(checkpointOf).foreach(Checkpoints.release)
-    } finally sc.removeSparkListener(listener)
+    val ((viaFlag, viaCap), jobs) = countingJobs {
+      (forced { Regimes.boundedRows(df, 1000) }, Regimes.boundedRows(df, 0))
+    }
+    assert(jobs === 0)
+    assert(evals.value === 0L)
+    Seq(viaFlag, viaCap).map(checkpointOf).foreach(Checkpoints.release)
   }
 
   test("a frame read from an upstream checkpoint keeps that checkpoint's blocks") {

@@ -413,9 +413,9 @@ class CurationOpsSpec extends AnyFunSuite with SparkSpec {
       Seq(("allnan", Double.NaN), ("allnan", Double.NaN))).toDF("g", "v")
     val probs = Seq(0.0, 0.25, 0.5, 0.9, 1.0)
     val one = graft.operators.Percentiles
-      .groupedExact(d, "g", "v", probs)
+      .groupedExact(d, "g", "v", probs, singleWindow = true)
     val two = graft.operators.Percentiles
-      .groupedExact(d, "g", "v", probs, twoPhaseThreshold = 0L)
+      .groupedExact(d, "g", "v", probs, singleWindow = false)
     // the two-phase plan really took the bucketed path: composite
     // (g, __b) window keys, never a group-only running sum over values
     val tp = two.queryExecution.analyzed.toString
@@ -453,7 +453,7 @@ class CurationOpsSpec extends AnyFunSuite with SparkSpec {
       .toDF("g", "v")
     val probs = Seq(0.0, 0.25, 0.5, 0.9, 1.0)
     val hist = graft.operators.Percentiles
-      .groupedExact(d, "g", "v", probs)
+      .groupedExact(d, "g", "v", probs, singleWindow = true)
       .collect().map(r => r.getString(0) -> r.toSeq).toMap
     val sel = graft.operators.Percentiles
       .groupedExactSelect(d, "g", "v", probs, accuracy = 100)
@@ -479,7 +479,7 @@ class CurationOpsSpec extends AnyFunSuite with SparkSpec {
     }.toDF("g", "v")
     val probs = Seq(0.25, 0.5, 0.9)
     val hist = graft.operators.Percentiles
-      .groupedExact(d, "g", "v", probs)
+      .groupedExact(d, "g", "v", probs, singleWindow = true)
       .collect().map(r => Option(r.getString(0)) -> r.toSeq).toMap
     val sel = graft.operators.Percentiles
       .groupedExactSelect(d, "g", "v", probs, accuracy = 1000)
@@ -495,7 +495,8 @@ class CurationOpsSpec extends AnyFunSuite with SparkSpec {
     val li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
     val probs = Seq(0.0, 0.25, 0.5, 0.9, 1.0)
     val hist = graft.operators.Percentiles
-      .groupedExact(li, "l_returnflag", "l_extendedprice", probs)
+      .groupedExact(li, "l_returnflag", "l_extendedprice", probs,
+        singleWindow = true)
       .collect().map(r => r.getString(0) -> r.toSeq).toMap
     val sel = graft.operators.Percentiles
       .groupedExactSelect(li, "l_returnflag", "l_extendedprice", probs)

@@ -205,6 +205,19 @@ class LlmLayerSpec extends AnyFunSuite with SparkSpec {
       l.contains("Filter") && l.contains("graft_hash60")), plan)
   }
 
+  test("decontaminate: the forced join form reads its eval side from the probe's checkpoint") {
+    val train = docs(
+      1L -> "the quick brown fox jumps over the lazy dog",
+      2L -> "completely different content about spark engines here")
+    val eval_ = docs(100L -> "the quick brown fox jumps over the lazy dog")
+    val evalLeaf = eval_.queryExecution.analyzed.collectLeaves().head
+    val leaves = forced {
+      Decontaminate.decontaminateAudit(train, eval_, shingleK = 3)
+    }.queryExecution.analyzed.collectLeaves()
+    assert(leaves.exists(_.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD]), leaves)
+    assert(!leaves.contains(evalLeaf), leaves)
+  }
+
   test("duplicateComponents: transitive chains close; greedy would differ") {
     val s = spark
     import s.implicits._

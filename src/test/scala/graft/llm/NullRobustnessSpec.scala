@@ -147,7 +147,8 @@ class NullRobustnessSpec extends AnyFunSuite with SparkSpec {
     val d = Seq(
       ("a", Option(1.0)), ("a", Option(2.0)), ("a", Option.empty[Double]),
       ("b", Option.empty[Double])).toDF("g", "v")
-    val out = graft.operators.Percentiles.groupedExact(d, "g", "v", Seq(0.5))
+    val out = graft.operators.Percentiles
+      .groupedExact(d, "g", "v", Seq(0.5), singleWindow = true)
       .collect().map(r => r.getString(0) -> (r.getDouble(1), r.getLong(2)))
       .toMap
     // group a: median over the two non-null values, n counts non-null;
@@ -170,9 +171,9 @@ class NullRobustnessSpec extends AnyFunSuite with SparkSpec {
       .map(r => Option(r.getString(0)) -> ((r.getDouble(1), r.getLong(2))))
       .toMap
     val one = m(graft.operators.Percentiles
-      .groupedExact(d, "g", "v", Seq(0.5)))
+      .groupedExact(d, "g", "v", Seq(0.5), singleWindow = true))
     val two = m(graft.operators.Percentiles
-      .groupedExact(d, "g", "v", Seq(0.5), twoPhaseThreshold = 0L))
+      .groupedExact(d, "g", "v", Seq(0.5), singleWindow = false))
     assert(one === Map(Option("a") -> ((2.0, 2L)), None -> ((4.0, 3L))))
     assert(two === one)
   }

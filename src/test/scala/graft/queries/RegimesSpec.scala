@@ -27,6 +27,44 @@ class RegimesSpec extends AnyFunSuite with SparkSpec {
     assert(!graft.Regimes.forceDistributed)
   }
 
+  test("small: forced, its probe is not evaluated and no job runs") {
+    var evaluated = false
+    val probe = spark.range(10).toDF()
+    val (answer, jobs) = countingJobs {
+      forced { graft.Regimes.small { evaluated = true; graft.Regimes.atMostRows(probe, 100) } }
+    }
+    assert(!answer && !evaluated && jobs === 0)
+    assert(graft.Regimes.small(graft.Regimes.atMostRows(probe, 100)))
+    assert(!graft.Regimes.small(graft.Regimes.atMostRows(probe, 9)))
+  }
+
+  test("atMostRows: exact at n and n + 1 rows; reads a bounded prefix of a large source") {
+    val s = spark
+    import s.implicits._
+    assert(graft.Regimes.atMostRows(s.range(100).toDF(), 100))
+    assert(!graft.Regimes.atMostRows(s.range(101).toDF(), 100))
+    val reads = s.sparkContext.longAccumulator("probe_reads")
+    val big = s.range(0, 1000000, 1, 4).map { i => reads.add(1); i }.toDF()
+    assert(!graft.Regimes.atMostRows(big, 100))
+    // LocalLimit stops each partition's iterator after n + 1 rows
+    assert(reads.value <= 4 * 101, s"probe read ${reads.value} of 1000000 rows")
+  }
+
+  test("atMostFileBytes: a missing path is not small; a file's size is the cut") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_file_bytes")
+    val f = dir.resolve("part.bin")
+    java.nio.file.Files.write(f, new Array[Byte](1000))
+    try {
+      assert(!graft.Regimes.atMostFileBytes(spark, dir.resolve("missing").toString, Long.MaxValue))
+      assert(graft.Regimes.atMostFileBytes(spark, f.toString, 1000))
+      assert(!graft.Regimes.atMostFileBytes(spark, f.toString, 999))
+      assert(graft.Regimes.atMostFileBytes(spark, dir.toString, 1000))
+    } finally {
+      java.nio.file.Files.delete(f)
+      java.nio.file.Files.delete(dir)
+    }
+  }
+
   test("q61 dup components: forced distributed loop is value-identical") {
     val default = rows("q61_dup_components")
     val dist = forced { rows("q61_dup_components") }
